@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -109,6 +110,16 @@ object Bench {
     paces.exists(_ > 2.5 * best)
   }
 
+  /** Cumulative executorRunTime (ms) over completed stages: the per-round
+    * occupancy numerator, sampled through `Crawler.roundCounter`. */
+  final class RunTimeListener extends SparkListener {
+    @volatile var runTime = 0L
+    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = synchronized {
+      val m = sc.stageInfo.taskMetrics
+      if (m != null) runTime += m.executorRunTime
+    }
+  }
+
   /** Full JSON string literal (quotes + escape of backslash, quote, and
     * ALL control chars — same contract as Verify's oracle_sql.json writer):
     * exception messages with newlines must not corrupt the bench line. */
@@ -133,7 +144,7 @@ object Bench {
       val cfg = benchConfig(threads, scale)
       val crawler = new Crawler(spark, work, cfg)
       // per-round executorRunTime sampling → in-band occupancy telemetry
-      val ml = new BenchProbe.MetricsListener
+      val ml = new RunTimeListener
       spark.sparkContext.addSparkListener(ml)
       crawler.roundCounter = () => ml.runTime
       val t0 = System.nanoTime()

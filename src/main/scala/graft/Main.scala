@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
 
 import graft.frontier.{CrawlConfig, Crawler}
 import graft.synth.SyntheticWeb
@@ -10,9 +11,10 @@ import graft.synth.SyntheticWeb
   *   graft.Main crawl  --workDir DIR [--sites N] [--degree N] [--maxDepth N]
   *                     [--seeds N] [--rounds N] [--burst N] [--budget N]
   *                     [--hostDelay N] [--ipDelay N] [--noBloom]
-  *                     [--incrementalHeads]
   *   graft.Main trace  --workDir DIR            # print the crawl trace
   *   graft.Main metrics --workDir DIR           # print per-round metrics
+  *   graft.Main explain <query> --data DIR      # formatted physical plan of
+  *                                              # one SparkEntry.queries leaf
   * }}}
   * On a cluster, drop the `--master` default by submitting with
   * spark-submit; locally it runs on local[*].
@@ -35,13 +37,15 @@ object Main {
 
   def main(args: Array[String]): Unit = {
     if (args.isEmpty) {
-      System.err.println("usage: graft.Main <crawl|trace|metrics> --workDir DIR [options]")
+      System.err.println("usage: graft.Main <crawl|trace|metrics> --workDir DIR [options]\n" +
+        "       graft.Main explain <query> --data DIR")
       sys.exit(2)
     }
     val cmd = args(0)
     val opts = parseArgs(args.drop(1))
-    val workDir = opts.getOrElse("workDir", {
-      System.err.println(s"error: $cmd requires --workDir DIR")
+    val dirKey = if (cmd == "explain") "data" else "workDir"
+    val dir = opts.getOrElse(dirKey, {
+      System.err.println(s"error: $cmd requires --$dirKey DIR")
       sys.exit(2); ""
     })
 
@@ -70,13 +74,12 @@ object Main {
         maxUrlsPerHost = opts.getOrElse("budget", Long.MaxValue.toString).toLong,
         maxRounds = opts.getOrElse("rounds", "8").toInt,
         useBloom = !opts.contains("noBloom"),
-        incrementalHeads = opts.contains("incrementalHeads"),
         statePartitions = opts.getOrElse("statePartitions",
           spark.sparkContext.defaultParallelism.toString).toInt)
 
       cmd match {
         case "crawl" =>
-          val crawler = new Crawler(spark, workDir, cfg)
+          val crawler = new Crawler(spark, dir, cfg)
           val resumedFrom = crawler.lastCompleteRound()
           val t0 = System.nanoTime()
           val rounds = crawler.run()
@@ -86,10 +89,18 @@ object Main {
           println(f"crawl: rounds=$rounds (resumed from $resumedFrom) fetched=$fetched " +
             f"seen=$seen wall=${secs}%.1fs urls/sec=${(fetched + seen) / secs}%.0f")
         case "trace" =>
-          new Crawler(spark, workDir, cfg).trace().show(100, truncate = false)
+          new Crawler(spark, dir, cfg).trace().show(100, truncate = false)
         case "metrics" =>
-          new Crawler(spark, workDir, cfg).metrics().orderBy("round", "partition_id")
+          new Crawler(spark, dir, cfg).metrics().orderBy("round", "partition_id")
             .show(100, truncate = false)
+        case "explain" =>
+          val query = args.lift(1).flatMap(SparkEntry.queries.get).getOrElse {
+            System.err.println("error: explain requires one of: " +
+              SparkEntry.queries.keys.toSeq.sorted.mkString(" "))
+            sys.exit(2)
+          }
+          try println(query(spark, dir).queryExecution.explainString(FormattedMode))
+          finally SparkEntry.cleanupTempDirs()
         case other =>
           System.err.println(s"unknown command: $other"); sys.exit(2)
       }

@@ -79,13 +79,14 @@ object Similarity {
     }.reduce(_ + _)
 
   /** Driver-side twin of one plane's sign under [[bucketExprW]] (same
-    * left-fold), for computing a literal query bucket without a Spark job. */
+    * left-fold), for computing a literal query bucket without a Spark job.
+    * A NaN product gets sign 1: Spark's `>=` orders NaN above every value. */
   private[analytics] def localBucket(q: Array[Double], weights: Array[Array[Double]]): Long =
     weights.zipWithIndex.map { case (w, p) =>
       var acc = 0.0
       var i = 0
       while (i < q.length) { acc += q(i) * w(i); i += 1 }
-      (if (acc >= 0) 1L else 0L) * (1L << p)
+      (if (acc >= 0 || acc.isNaN) 1L else 0L) * (1L << p)
     }.sum
 
   /** The vectors' common dimension, or None when ragged/empty/zero-length

@@ -87,7 +87,6 @@ case class CrawlConfig(
       * scheduled+deduped/sec — the store is the WARC-sink side) */
     storeDocs: Boolean = true,
     useBloom: Boolean = true,
-    bloomFpp: Double = 0.03,
     /** consolidate the per-round delta blooms into one full filter built
       * distributed from the seen table once this many deltas accumulate */
     bloomMaxDeltas: Int = 12,
@@ -95,9 +94,6 @@ case class CrawlConfig(
     /** below this seen-size the bloom prefilter is skipped (anti-join alone
       * is cheaper than building + broadcasting the filter) */
     bloomMinSeen: Long = 50000L,
-    /** candidate batches at or below this size probe the seen table via a
-      * broadcast hash set (scan, no shuffle); above it, sort-merge anti-join */
-    probeThreshold: Long = 2L << 20,
     ipSpace: Long = 1L << 20,
     /** multi-agent IP-delay attenuation (StartupConfiguration.java:213-226,
       * ParsingThread.java:271-274): with k hosts sharing an IP the
@@ -118,15 +114,6 @@ case class CrawlConfig(
       * parts (plan-size hygiene between compactions) */
     tombstoneFoldParts: Int = 32,
     logRounds: Boolean = false,
-    /** INCREMENTAL per-host heads maintenance (the 10^10-frontier mode):
-      * selection reads a per-host top-K state table updated from the
-      * round's deltas instead of re-aggregating the whole frontier every
-      * round; only "dirty" hosts (heads drained below the window while
-      * pending rows remain outside the kept K) trigger a frontier re-scan.
-      * Exact — oracle-parity-tested. Worthwhile when pending-per-host ≫ K
-      * (the real web); at small pending-per-host the heads state is the
-      * frontier re-materialized, so the default full aggregation wins. */
-    incrementalHeads: Boolean = false,
     /** storage level for in-memory state blocks between snapshots */
     stateStorage: String = "MEMORY_AND_DISK")
 
@@ -167,16 +154,6 @@ case class FetchUnit(
   * aggregation — CPU-parallel, shuffle ∝ hosts·k') plus work ∝ the
   * selected burst and the new-link batch. No full-frontier sort, window,
   * or join-back remains on the round path.
-  *
-  * The remaining O(frontier)-per-round term is that heads scan. The
-  * 10^10-frontier alternative is `cfg.incrementalHeads`: a per-host top-K
-  * state table updated per round from the deltas and per-host consumed
-  * lists (see [[updateHeadsState]]), where only "dirty" hosts — drained
-  * below the selection window with pending rows outside the kept K, a
-  * subset of the round's SELECTED hosts — trigger a frontier re-scan
-  * (bucket-pruned with Iceberg hostHash-bucketed state). Hosts with ≤ K
-  * pending — the overwhelming majority of the web — never trigger a
-  * frontier scan at all. Exact; oracle-parity-tested.
   *
   * State layout under `workDir` (the Iceberg-snapshot analog):
   * {{{
@@ -325,73 +302,12 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
     * skips at the queue head */
   private val kHeads = math.max(1, cfg.burst + cfg.headSlack)
 
-  /** incremental-heads kept size: one full selection window of slack
-    * (per-round consumption ≤ kHeads, so an oversized host survives a
-    * selected round before its refill) */
-  private val headsK = kHeads * 2
+  /** candidate batches at or below this size probe the seen table via a
+    * broadcast hash set (scan, no shuffle); above it, sort-merge anti-join */
+  private val ProbeThreshold = 2L << 20
 
-  /** Full heads-state rebuild from a pending view (init / resume from a
-    * snapshot written without one). */
-  private def buildHeadsState(pending: DataFrame): DataFrame =
-    pending.groupBy("hostHash").agg(
-      topk_heads(col("seq"), col("url"), col("urlHash"), headsK).as("heads"),
-      count(lit(1)).as("pendingCnt"))
-
-  private val headsArrType = "array<struct<seq:bigint,url:string,urlHash:bigint>>"
-
-  /** One round of EXACT incremental heads maintenance.
-    *
-    * Invariant: `heads` holds the min(headsK, pendingCnt) smallest pending
-    * entries of the host, seq-ascending. Exactness leans on two facts:
-    * consumed entries always come from the selection window (the smallest
-    * kHeads), and seq assignment is MONOTONE — every addition is larger
-    * than every existing pending row, so for a COMPLETE host (no pending
-    * rows outside `heads`) additions simply append (capped at headsK),
-    * and for an incomplete host additions can never precede the outside
-    * rows, so the kept array is left untouched. The only hosts that need
-    * a frontier re-scan ("dirty") are those whose array drained below the
-    * selection window while pending rows remain outside — a subset of the
-    * hosts SELECTED this round, so per-round frontier work is ∝ the
-    * politeness-bounded selection, not the frontier (with hostHash-
-    * bucketed state the refill is additionally a bucket-pruned read).
-    *
-    * @param consumed (hostHash, __cons: array of consumed urlHashes)
-    * @param addAgg   (hostHash, __add: K-capped additions, __addN: count)
-    * @param pendingNext the post-round pending frontier view (refill source)
-    */
-  private def updateHeadsState(headsState: DataFrame, consumed: DataFrame,
-      addAgg: DataFrame, pendingNext: DataFrame): DataFrame = {
-    val emptyArr = array().cast(headsArrType)
-    val joined = headsState
-      .join(consumed, Seq("hostHash"), "left")
-      .join(addAgg, Seq("hostHash"), "full_outer")
-    val h0 = coalesce(col("heads"), emptyArr)
-    val afterCons = when(col("__cons").isNull, h0)
-      .otherwise(filter(h0, e => !array_contains(col("__cons"), e.getField("urlHash"))))
-    val m1 = joined.select(
-      col("hostHash"),
-      afterCons.as("__h1"),
-      (coalesce(col("pendingCnt"), lit(0L))
-        - (size(h0) - size(afterCons)).cast("long")).as("__p1"),
-      col("__add"), coalesce(col("__addN"), lit(0L)).as("__addN"))
-    val complete = col("__p1") === size(col("__h1")).cast("long")
-    val m2 = m1.select(
-      col("hostHash"),
-      when(complete && col("__addN") > 0,
-          slice(concat(col("__h1"), coalesce(col("__add"), emptyArr)), 1, headsK))
-        .otherwise(col("__h1")).as("heads"),
-      (col("__p1") + col("__addN")).as("pendingCnt"))
-    val dirtyHosts = m2
-      .where(col("pendingCnt") > size(col("heads")) && size(col("heads")) < kHeads)
-      .select("hostHash")
-    val refill = pendingNext
-      .join(broadcast(dirtyHosts), Seq("hostHash"), "left_semi")
-      .groupBy("hostHash")
-      .agg(topk_heads(col("seq"), col("url"), col("urlHash"), headsK).as("__r"))
-    lc(m2.join(refill, Seq("hostHash"), "left")
-      .select(col("hostHash"), coalesce(col("__r"), col("heads")).as("heads"),
-        col("pendingCnt")))
-  }
+  /** fpp of the seen-set bloom bank (consolidated and per-round deltas) */
+  private val BloomFpp = 0.03
 
   private val gatesTrivial =
     cfg.parseFilter == "true" && cfg.followFilter == "true" && cfg.storeFilter == "true"
@@ -407,11 +323,7 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
         * folded when the chain gets long); only deltas are ever
         * re-materialized, never the accumulated set. */
       tombstones: DataFrame, pendingRows: Long, tombRows: Long,
-      tombParts: Int = 0,
-      /** incremental-heads state (hostHash, heads: sorted array of the
-        * up-to-K smallest pending entries, pendingCnt); null unless
-        * cfg.incrementalHeads */
-      headsState: DataFrame = null)
+      tombParts: Int = 0)
   private var live: Option[LiveState] = None
 
   // ---------------- initialization (round 0) ----------------
@@ -439,13 +351,11 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
     frontier.select("urlHash").write.options(graft.util.FastLocalFs.writeOptions).mode(SaveMode.Overwrite).parquet(appendDir("seen", 0))
     val hosts = newHostsFrom(frontier, emptyHosts).transform(lc)
     val ips = newIpsFrom(frontier, emptyIps).transform(lc)
-    val headsInit = if (cfg.incrementalHeads) lc(buildHeadsState(frontier)) else null
     val maxSeq = frontier.count()
-    writeState(0, frontier, hosts, ips, maxSeq, cfg.initialFrontSize, headsInit)
+    writeState(0, frontier, hosts, ips, maxSeq, cfg.initialFrontSize)
     live = Some(LiveState(0, maxSeq, cfg.initialFrontSize, frontier, hosts, ips,
       frontier.select("urlHash").transform(lc), emptyDigests,
-      emptyTombstones, pendingRows = maxSeq, tombRows = 0L,
-      headsState = headsInit))
+      emptyTombstones, pendingRows = maxSeq, tombRows = 0L))
   }
 
   private def emptyHosts = spark.emptyDataset[HostState].toDF
@@ -482,8 +392,7 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
       .select("ipHash", "nextFetch")
 
   private def writeState(round: Int, frontier: DataFrame, hosts: DataFrame,
-      ips: DataFrame, maxSeq: Long, frontSize: Long,
-      headsState: DataFrame = null): Unit = {
+      ips: DataFrame, maxSeq: Long, frontSize: Long): Unit = {
     // Frontier and hosts are laid out by hostHash — the reference's
     // agent-assignment function (BubingJob.java:47-52); at cluster scale
     // this becomes Iceberg bucket partitioning so the per-round
@@ -494,17 +403,10 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
       () => hosts.repartition(math.max(1, cfg.statePartitions / 4), col("hostHash"))
         .write.options(graft.util.FastLocalFs.writeOptions).mode(SaveMode.Overwrite).parquet(stateDir(round, "hosts")),
       () => ips.repartition(math.max(1, cfg.statePartitions / 4), col("ipHash"))
-        .write.options(graft.util.FastLocalFs.writeOptions).mode(SaveMode.Overwrite).parquet(stateDir(round, "ips")),
-      () => if (headsState != null)
-        headsState.repartition(math.max(1, cfg.statePartitions / 4), col("hostHash"))
-          .write.options(graft.util.FastLocalFs.writeOptions).mode(SaveMode.Overwrite).parquet(stateDir(round, "heads")))
-    // scalars LAST: its _SUCCESS is the snapshot-completeness marker.
-    // headsK is persisted so a resume can detect a window-size change
-    // (burst/headSlack grown between runs) and rebuild the heads state —
-    // the persisted arrays are sized for the OLD window and would silently
-    // truncate the first selection otherwise.
-    Seq((maxSeq, round, frontSize, headsK))
-      .toDF("maxSeq", "round", "frontSize", "headsK")
+        .write.options(graft.util.FastLocalFs.writeOptions).mode(SaveMode.Overwrite).parquet(stateDir(round, "ips")))
+    // scalars LAST: its _SUCCESS is the snapshot-completeness marker
+    Seq((maxSeq, round, frontSize))
+      .toDF("maxSeq", "round", "frontSize")
       .coalesce(1).write.options(graft.util.FastLocalFs.writeOptions).mode(SaveMode.Overwrite).parquet(stateDir(round, "scalars"))
   }
 
@@ -525,24 +427,11 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
     val maxSeq = sc.getAs[Long]("maxSeq")
     val frontSize = sc.getAs[Long]("frontSize")
     val frontier = spark.read.parquet(stateDir(round, "frontier"))
-    // heads arrays are sized for the headsK in force when the snapshot was
-    // written; a config change (burst/headSlack) invalidates them
-    val snapHeadsK =
-      if (sc.schema.fieldNames.contains("headsK")) sc.getAs[Int]("headsK") else -1
-    val headsState =
-      if (!cfg.incrementalHeads) null
-      else if (snapHeadsK == headsK && exists(stateDir(round, "heads") + "/_SUCCESS"))
-        spark.read.parquet(stateDir(round, "heads"))
-      // snapshot written without a heads table (mode toggled on) or with a
-      // different window size: rebuild from the (compacted = pending)
-      // frontier snapshot
-      else lc(buildHeadsState(frontier))
     LiveState(round, maxSeq, frontSize, frontier,
       spark.read.parquet(stateDir(round, "hosts")),
       spark.read.parquet(stateDir(round, "ips")),
       readSeen(round), readDigests(round),
-      emptyTombstones, pendingRows = frontier.count(), tombRows = 0L,
-      headsState = headsState)
+      emptyTombstones, pendingRows = frontier.count(), tombRows = 0L)
   }
 
   // ---------------- bloom bank (broadcast-refreshed URL-seen filter) ----------------
@@ -588,7 +477,7 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
       clearBloomBank()
       val expected = math.max(1024L, math.min(state.maxSeq, cfg.bloomExpected))
       bloomBank = Vector(spark.sparkContext.broadcast(
-        state.seen.stat.bloomFilter("urlHash", expected, cfg.bloomFpp)))
+        state.seen.stat.bloomFilter("urlHash", expected, BloomFpp)))
       bloomRound = state.round
     }
     bloomBank
@@ -661,15 +550,8 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
     // full-frontier ordering. Priority = head seq (FIFO per host,
     // VisitState.java:284-304); the inner join doubles as the
     // has-pending-work filter.
-    val heads =
-      if (cfg.incrementalHeads && st.headsState != null)
-        // the maintained state's first kHeads entries ARE the window
-        // (invariant: heads = min(headsK, pendingCnt) smallest pending) —
-        // no frontier scan at selection time
-        st.headsState.where(size(col("heads")) > 0)
-          .select(col("hostHash"), slice(col("heads"), 1, kHeads).as("heads"))
-      else frontier.groupBy("hostHash")
-        .agg(topk_heads(col("seq"), col("url"), col("urlHash"), kHeads).as("heads"))
+    val heads = frontier.groupBy("hostHash")
+      .agg(topk_heads(col("seq"), col("url"), col("urlHash"), kHeads).as("heads"))
 
     val nowC = ref_long(now, "now")
     val ipReady = ips.where(col("nextFetch") <= nowC).select("ipHash")
@@ -863,8 +745,7 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
       val disRows = if (disLc == null) 0L else disLc.count()
       if (disRows == 0) {
         // politeness wait: carry state forward, snapshot on cadence
-        val snapped = maybeSnapshot(round, frontier, hosts, ips, maxSeq, st.frontSize,
-          force = false, headsState = st.headsState)
+        val snapped = maybeSnapshot(round, frontier, hosts, ips, maxSeq, st.frontSize, force = false)
         live = Some(
           if (snapped)
             st.copy(round = round,
@@ -891,23 +772,9 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
           if (st.tombParts >= cfg.tombstoneFoldParts) (lc(st.tombstones.unionByName(disLc)), 1)
           else (st.tombstones.unionByName(disLc), st.tombParts + 1)
         val tombRowsNext = st.tombRows + disRows
-        val headsNext0 =
-          if (!cfg.incrementalHeads) null
-          else {
-            val consumed0 = gated
-              .select(col("hostHash"), explode(col("__dropped")).as("__d"))
-              .select(col("hostHash"), col("__d.urlHash").as("urlHash"))
-              .groupBy("hostHash").agg(collect_set(col("urlHash")).as("__cons"))
-            val addEmpty = st.frontier.limit(0).groupBy("hostHash").agg(
-              topk_heads(col("seq"), col("url"), col("urlHash"), headsK).as("__add"),
-              count(lit(1)).as("__addN"))
-            val pendingNext0 = st.frontier
-              .join(broadcast(tombstonesNext), Seq("urlHash"), "left_anti")
-            updateHeadsState(st.headsState, consumed0, addEmpty, pendingNext0)
-          }
         lazy val compactedNext = compactFrontier(st.frontier, tombstonesNext, tombRowsNext)
         val snapped = maybeSnapshot(round, compactedNext, hostsNext, ips, maxSeq,
-          st.frontSize, force = false, headsState = headsNext0)
+          st.frontSize, force = false)
         val (fNext, tombNext, tombRowsFinal, tombPartsFinal) =
           if (snapped) (spark.read.parquet(stateDir(round, "frontier")), emptyTombstones, 0L, 0)
           else if (tombRowsNext >= cfg.tombstoneCompactRows)
@@ -919,8 +786,7 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
           else hostsNext.transform(lc)
         live = Some(st.copy(round = round, frontier = fNext, hosts = hNext,
           tombstones = tombNext, pendingRows = st.pendingRows - disRows,
-          tombRows = tombRowsFinal, tombParts = tombPartsFinal,
-          headsState = headsNext0))
+          tombRows = tombRowsFinal, tombParts = tombPartsFinal))
       }
       bloomRound = round
       fetched0.unpersist(); selected.unpersist()
@@ -955,7 +821,7 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
     val digestsSeen = st.digests
     val (linkSources, docs, newDigests) = if (cfg.storeDocs) {
       val flagged = Crawler
-        .flagDuplicates(pages, digestsSeen, probe = fetchedCount <= cfg.probeThreshold)
+        .flagDuplicates(pages, digestsSeen, probe = fetchedCount <= ProbeThreshold)
         .cache()
       val nd = flagged.where(!col("is_duplicate")).select("digest").distinct()
       // duplicate pages contribute no outlinks (ParsingThread.java:408-410)
@@ -1181,14 +1047,14 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
           dedupIn = c
           sievedInput = Sieve.newUrlsScanProbe(parsedLinks, seen,
             Seq("parentSeq", "linkIdx"), blooms, lc,
-            broadcastLimit = cfg.probeThreshold,
+            broadcastLimit = ProbeThreshold,
             candidateCount = dedupIn, seenCount = maxSeq,
             prebuiltBatchBloom = bb)
         } else {
           dedupIn = parsedLinks.count()
           sievedInput = Sieve
             .newUrls(parsedLinks, seen, Seq("parentSeq", "linkIdx"), Nil,
-              broadcastProbe = dedupIn <= cfg.probeThreshold)
+              broadcastProbe = dedupIn <= ProbeThreshold)
             .transform(lc)
         }
       },
@@ -1241,7 +1107,7 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
       () => {
         if (wantDeltaBloom && dedupIn > 0) {
           val (_, bf) = Sieve.bloomAggParallel(sievedInput, "urlHash",
-            math.max(dedupIn, 1024L), cfg.bloomFpp, bloomMergeGroups)
+            math.max(dedupIn, 1024L), BloomFpp, bloomMergeGroups)
           extendBloom(bf, round)
         } else extendBloom(null, round)
       }))
@@ -1316,30 +1182,12 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
     var hNextMem: DataFrame = null
     var iNextMem: DataFrame = null
     var digestsLc: DataFrame = null
-    var headsNextV: DataFrame = null
     var selHosts = 0L
     inParallel(
       () => metricsOut.write.options(graft.util.FastLocalFs.writeOptions).mode(SaveMode.Overwrite).parquet(appendDir("metrics", round)),
       () => if (!snapDue) hNextMem = hostsNext.transform(lc),
       () => if (!snapDue) iNextMem = ipsNext.transform(lc),
       () => if (cfg.storeDocs) digestsLc = newDigests.transform(lc),
-      () => if (cfg.incrementalHeads) {
-        // consumed = exactly the tombstoned page URLs, keyed by host
-        val consumed = fetched.where(!col("isRobots") && col("excClass").isNull)
-          .select(col("hostHash"), col("urlHash"))
-          .unionByName(gated
-            .select(col("hostHash"), explode(col("__dropped")).as("__d"))
-            .select(col("hostHash"), col("__d.urlHash").as("urlHash")))
-          .unionByName(hostsU.where(col("__drop"))
-            .select(col("hostHash"), col("__dropHash").as("urlHash")))
-          .groupBy("hostHash").agg(collect_set(col("urlHash")).as("__cons"))
-        val addAgg = newDelta.groupBy("hostHash").agg(
-          topk_heads(col("seq"), col("url"), col("urlHash"), headsK).as("__add"),
-          count(lit(1)).as("__addN"))
-        val pendingNext = frontierNext
-          .join(broadcast(tombstonesNext), Seq("urlHash"), "left_anti")
-        headsNextV = updateHeadsState(st.headsState, consumed, addAgg, pendingNext)
-      },
       () => if (frontActive) selHosts = fetched.select("hostHash").distinct().count())
 
     // adaptive front growth: a saturated round doubles the cap
@@ -1359,7 +1207,7 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
     // build is a job, paid only on the rounds that actually compact.
     lazy val compactedNext = compactFrontier(frontierNext, tombstonesNext, tombRowsNext)
     val snapped = maybeSnapshot(round, compactedNext, hostsNext, ipsNext,
-      maxSeq + sieveOut, frontSizeNext, force = false, headsState = headsNextV)
+      maxSeq + sieveOut, frontSizeNext, force = false)
     val (fNext, tombNext, tombRowsFinal, tombPartsFinal) =
       if (snapped)
         (spark.read.parquet(stateDir(round, "frontier")), emptyTombstones, 0L, 0)
@@ -1383,7 +1231,7 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
       else st.digests
     live = Some(LiveState(round, maxSeq + sieveOut, frontSizeNext, fNext, hNext, iNext,
       seenNext, digestsNext, tombNext, pendingRowsNext, tombRowsFinal,
-      tombParts = tombPartsFinal, headsState = headsNextV))
+      tombParts = tombPartsFinal))
 
     fetched0.unpersist(); selected.unpersist()
     parsedLinks.unpersist(); hostsU.unpersist()
@@ -1396,10 +1244,9 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
     * (see [[compactFrontier]]) that must not run on the rounds that skip
     * the snapshot. */
   private def maybeSnapshot(round: Int, frontier: => DataFrame, hosts: DataFrame,
-      ips: DataFrame, maxSeq: Long, frontSize: Long, force: Boolean,
-      headsState: DataFrame = null): Boolean = {
+      ips: DataFrame, maxSeq: Long, frontSize: Long, force: Boolean): Boolean = {
     val due = force || cfg.checkpointEvery <= 1 || round % cfg.checkpointEvery == 0
-    if (due) writeState(round, frontier, hosts, ips, maxSeq, frontSize, headsState)
+    if (due) writeState(round, frontier, hosts, ips, maxSeq, frontSize)
     due
   }
 
@@ -1443,7 +1290,7 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
   private def snapshotLive(): Unit = live.foreach { st =>
     if (!exists(stateDir(st.round, "scalars") + "/_SUCCESS")) {
       writeState(st.round, compactFrontier(st.frontier, st.tombstones, st.tombRows),
-        st.hosts, st.ips, st.maxSeq, st.frontSize, st.headsState)
+        st.hosts, st.ips, st.maxSeq, st.frontSize)
     }
   }
 

@@ -54,7 +54,7 @@ class BenchSpec extends AnyFunSuite {
       nSeeds = 4, hostDelay = 2, ipDelay = 1, burst = 2,
       maxUrlsPerHost = 12, maxRounds = 4, statePartitions = 4)
     val crawler = new graft.frontier.Crawler(spark, dir, cfg)
-    val ml = new BenchProbe.MetricsListener
+    val ml = new Bench.RunTimeListener
     spark.sparkContext.addSparkListener(ml)
     crawler.roundCounter = () => ml.runTime
     val rounds = crawler.run()

@@ -331,43 +331,15 @@ class CrawlerSpec extends AnyFunSuite {
     assertOracleParity(crawler, f, OracleCrawler.Gates(fetchOk = _ => false))
   }
 
-  test("incremental heads maintenance: spark == oracle, == full-aggregation crawl") {
-    val f = cfg.copy(incrementalHeads = true, maxRounds = 6)
-    val dir = tempDir("incheads")
-    val crawler = new Crawler(spark, dir, f)
-    crawler.run()
-    // identical to the full-aggregation mode...
-    val dirFull = tempDir("incheads-full")
-    val full = new Crawler(spark, dirFull, cfg.copy(maxRounds = 6))
-    full.run()
-    assert(collectTrace(crawler) == collectTrace(full),
-      "incremental heads changed the crawl")
-    // ...and to the oracle
-    assertOracleParity(crawler, f)
-  }
-
-  test("incremental heads under gates + exceptions + budget: spark == oracle") {
-    val f = cfg.copy(incrementalHeads = true,
+  test("gates + exceptions + budget: spark == oracle") {
+    val f = cfg.copy(
       web = cfg.web.copy(failEvery = 4),
       fetchFilter = "not URLMatchesRegex(.*/3/.*)",
       maxUrlsPerHost = 9, maxRounds = 9)
-    val dir = tempDir("incheads-gates")
+    val dir = tempDir("gates-exc-budget")
     val crawler = new Crawler(spark, dir, f)
     crawler.run()
     assertOracleParity(crawler, f, OracleCrawler.Gates(fetchOk = u => !u.matches(".*/3/.*")))
-  }
-
-  test("incremental heads: resume from snapshot continues identically") {
-    val f = cfg.copy(incrementalHeads = true, maxRounds = 5)
-    val dFull = tempDir("incheads-res-full")
-    val full = new Crawler(spark, dFull, f)
-    full.run()
-    val dSplit = tempDir("incheads-res-split")
-    val part1 = new Crawler(spark, dSplit, f.copy(maxRounds = 2))
-    part1.run()
-    val part2 = new Crawler(spark, dSplit, f)
-    part2.run()
-    assert(collectTrace(full) == collectTrace(part2))
   }
 
   test("docs carry digests; duplicates are flagged deterministically") {
