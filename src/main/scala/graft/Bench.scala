@@ -59,7 +59,6 @@ object Bench {
     bloomExpected = 64L << 20,
     checkpointEvery = 99, // snapshot only at end: in-memory state threading
     statePartitions = threads,
-    logRounds = true,
     stateStorage = "DISK_ONLY") // tmpfs-backed blocks: off the JVM heap
 
   /** One measured crawl run. `throttled` = the run's own roundWalls show a
@@ -139,8 +138,7 @@ object Bench {
       // workDir on tmpfs: the per-round seen/trace/metrics appends are on
       // the data path; /tmp is a spinning virtual disk on this box and its
       // contention inverted the 8-vs-32 scaling in round 1
-      val work = Files.createTempDirectory(
-        java.nio.file.Paths.get("/dev/shm"), s"graft-bench-$threads").toString
+      val work = graft.util.ScratchDirs.create(s"graft-bench-$threads")
       val cfg = benchConfig(threads, scale)
       val crawler = new Crawler(spark, work, cfg)
       // per-round executorRunTime sampling → in-band occupancy telemetry
@@ -151,6 +149,9 @@ object Bench {
       crawler.run()
       val wall = (System.nanoTime() - t0) / 1e9
       spark.sparkContext.removeSparkListener(ml)
+      crawler.roundWalls.foreach { case (r, n, w) =>
+        println(f"[crawler] round=$r fetched=$n wall=$w%.1fs")
+      }
       val m = crawler.metrics().agg(
         sum("fetched").as("fetched"), sum("dedup_in").as("dedup_in")).collect()(0)
       val processed = m.getLong(0) + m.getLong(1)
@@ -162,10 +163,7 @@ object Bench {
       val traceRows = crawler.trace().count()
       // tmpfs hygiene: each run leaves ~1 GB of state on /dev/shm;
       // repeated bench invocations would otherwise exhaust it
-      try {
-        import scala.reflect.io.Directory
-        new Directory(new java.io.File(work)).deleteRecursively()
-      } catch { case _: Exception => () }
+      graft.util.ScratchDirs.delete(work)
       val walls = crawler.roundWalls.toSeq
       CrawlRun(processed / wall, processed, wall, chk, traceRows, walls,
         crawler.roundRunMs.toSeq, threads,

@@ -20,40 +20,14 @@ object SparkEntry {
 
   private def t(dir: String, name: String) = s"$dir/$name.parquet"
 
-  /** Every temp dir the memoized index/crawl builders create, so harness
-    * mains (Verify/Bench) can clean up after themselves. */
-  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  private def newTempDir(prefix: String): String = {
-    // tmpfs when available: the ANN index layouts are hundreds of small
-    // partition-directory files, and /tmp on this box is a slow spinning
-    // virtual disk — the partitioned index WRITE was ~4 s of pure file
-    // commit overhead there vs <1 s on /dev/shm (same reasoning as the
-    // Bench/crawl work dirs; a real cluster has per-executor NVMe).
-    // Everything here is scratch, deleted by cleanupTempDirs, and
-    // FIXED-SIZE regardless of the sf dir: the ANN indexes are the
-    // embeddings table (<10 MB at sf0.1) and the mini-crawl config is a
-    // constant (60 sites, 4 rounds), so tmpfs capacity is not a function
-    // of scale factor.
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val p =
-      if (java.nio.file.Files.isDirectory(shm) && java.nio.file.Files.isWritable(shm))
-        java.nio.file.Files.createTempDirectory(shm, prefix).toString
-      else java.nio.file.Files.createTempDirectory(prefix).toString
-    tempDirs.add(p)
-    p
-  }
-
-  /** Delete the memoized ANN-index / mini-crawl temp dirs and reset the
-    * memos (idempotent; call after the last query of a harness run). */
+  /** Delete the memoized ANN-index / mini-crawl scratch dirs (every
+    * [[graft.util.ScratchDirs]] dir of the process) and reset the memos
+    * (idempotent; call after the last query of a harness run). Those dirs
+    * are FIXED-SIZE whatever the sf dir (the ANN indexes hold the
+    * embeddings table, the mini-crawl config is a constant), so their
+    * tmpfs footprint does not grow with the scale factor. */
   def cleanupTempDirs(): Unit = {
-    var p = tempDirs.poll()
-    while (p != null) {
-      try {
-        import scala.reflect.io.Directory
-        new Directory(new java.io.File(p)).deleteRecursively()
-      } catch { case _: Exception => () }
-      p = tempDirs.poll()
-    }
+    graft.util.ScratchDirs.cleanup()
     annIndexMemo.clear(); ivfMemo.clear(); crawlMemo.clear()
   }
 
@@ -306,7 +280,7 @@ object SparkEntry {
   private val annIndexMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def lshIndex(s: SparkSession, dir: String): String =
     annIndexMemo.computeIfAbsent(s.sparkContext.applicationId + dir, _ => {
-      val p = newTempDir("graft-ann-index")
+      val p = graft.util.ScratchDirs.create("graft-ann-index")
       Similarity.writeBucketed(
         s.read.parquet(t(dir, "embeddings")).where(col("vec_id") =!= 0),
         "vec_id", "embedding", p, planes = 8)
@@ -318,7 +292,7 @@ object SparkEntry {
   private val ivfMemo = new java.util.concurrent.ConcurrentHashMap[String, (String, Array[Array[Double]])]()
   private def ivfIndex(s: SparkSession, dir: String): (String, Array[Array[Double]]) =
     ivfMemo.computeIfAbsent(s.sparkContext.applicationId + dir, _ => {
-      val p = newTempDir("graft-ann-ivf")
+      val p = graft.util.ScratchDirs.create("graft-ann-ivf")
       val c = Similarity.writeIvf(
         s.read.parquet(t(dir, "embeddings")).where(col("vec_id") =!= 0),
         "vec_id", "embedding", p, cells = 32, seed = 42L)
@@ -418,7 +392,7 @@ object SparkEntry {
   private val crawlMemo = new java.util.concurrent.ConcurrentHashMap[String, frontier.Crawler]()
   private def miniCrawl(s: SparkSession): frontier.Crawler =
     crawlMemo.computeIfAbsent(s.sparkContext.applicationId, _ => {
-      val work = newTempDir("graft-q-crawl")
+      val work = graft.util.ScratchDirs.create("graft-q-crawl")
       val cfg = frontier.CrawlConfig(
         web = synth.SyntheticWeb.Config(sites = 60, degree = 4, maxDepth = 2),
         nSeeds = 6, maxRounds = 4, burst = 2, statePartitions = 4)

@@ -41,31 +41,6 @@ object Dedup {
     docs.withColumn("__rn", row_number().over(w)).where(col("__rn") === 1).drop("__rn")
   }
 
-  /** MinHash signature + banded LSH keys.
-    * Returns (id, band, bandHash) — one row per band per doc.
-    * `mod > 0` is oracle-twin mode: the signature uses the SQL-expressible
-    * rolling-polynomial hash and the band key becomes the joined slice
-    * values (a string) instead of xxhash64 — DuckDB groups by the same
-    * key, so the whole banding pipeline is driver-checkable. */
-  def minhashBands(docs: DataFrame, idCol: String, textCol: String,
-      shingleK: Int = 5, numHashes: Int = 32, bands: Int = 8,
-      mod: Long = 0L): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    val rows = numHashes / bands
-    val sig = docs.select(col(idCol).as("id"),
-      minhashes(col(textCol), shingleK, numHashes, mod).as("sig"))
-    // band b = hash of signature slice [b*rows, (b+1)*rows)
-    def bandKey(s: Column): Column =
-      if (mod > 0) concat_ws("_", s.cast("array<string>"))
-      else xxhash64(s.cast("array<string>"))
-    val bandCols = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        bandKey(slice(col("sig"), b * rows + 1, rows)).as("bandHash"))
-    }
-    sig.select(col("id"), explode(array(bandCols: _*)).as("bk"))
-      .select(col("id"), col("bk.band"), col("bk.bandHash"))
-  }
-
   /** Skew guard for LSH band self-joins: drop buckets larger than
     * `maxBucketSize`. A single degenerate bucket (empty/boilerplate docs
     * sharing a signature — guaranteed in web corpora) otherwise goes

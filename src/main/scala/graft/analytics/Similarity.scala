@@ -274,19 +274,4 @@ object Similarity {
         .select(col("id"), col("v")),
       query, k)
   }
-
-  /** All-pairs exact top-k neighbors for a SMALL id set (verification /
-    * golden stage): ids x corpus, rank per id. */
-  def topKForIds(emb: DataFrame, idCol: String, vecCol: String,
-      ids: Seq[Long], k: Int): DataFrame = {
-    val v = emb.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
-    val queries = v.where(col("id").isin(ids: _*))
-      .select(col("id").as("qid"), col("v").as("qv"))
-    val w = Window.partitionBy("qid").orderBy(col("cosine").desc, col("id"))
-    v.crossJoin(broadcast(queries))
-      .where(col("id") =!= col("qid"))
-      .select(col("qid"), col("id"), cosine(col("v"), col("qv")).as("cosine"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-  }
 }

@@ -13,11 +13,6 @@ object TextStats {
   /** Whitespace token count. */
   def tokenCount(text: Column): Column = size(split(text, " "))
 
-  /** BPE-ish subword count: word-piece regex splits on transitions
-    * (letters / digits / other), the usual pre-tokenizer approximation. */
-  def subwordCount(text: Column): Column =
-    size(filter(split(text, "(?<=[a-z])(?=[0-9])|(?<=[0-9])(?=[a-z])|\\s+"), t => length(t) > 0))
-
   /** Occurrences of `needle` in `text` via length arithmetic (exact for
     * non-overlapping counting; identical formula is DuckDB-expressible,
     * which makes the quality features oracle-checkable). */

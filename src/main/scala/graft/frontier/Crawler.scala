@@ -29,12 +29,6 @@ case class CrawlConfig(
     ipDelay: Long = 1,
     /** keep-alive burst: URLs fetched per host per round (FetchingThread.java:298,390) */
     burst: Int = 1,
-    /** per-host head-window slack beyond `burst`: robots-disallowed /
-      * fetch-filtered URLs among the first `burst + headSlack` heads are
-      * skipped within the same round (the reference skips them one at a
-      * time at the queue head); a pathological host with more consecutive
-      * disallowed heads defers the rest to later rounds */
-    headSlack: Int = 8,
     /** per-host URL budget (maxUrlsPerSchemeAuthority, Frontier.java:615-618) */
     maxUrlsPerHost: Long = Long.MaxValue,
     maxRounds: Int = 8,
@@ -62,15 +56,6 @@ case class CrawlConfig(
     /** blacklisted synthetic IP ids (ip_of_host space) — the reference's
       * IP blacklist (FetchingThread.java:310-347, DNSThread.java:81-93) */
     blacklistIps: Seq[Long] = Nil,
-    /** per-exception-class wait/retry/killer tables (ParsingThread.java:75-116) */
-    exceptionRules: Map[String, ExcRule] = Map(
-      "socket_timeout" -> ExcRule(waitRounds = 1, maxRetries = 4, killer = false),
-      "connection_closed" -> ExcRule(waitRounds = 1, maxRetries = 2, killer = false),
-      "unknown_host" -> ExcRule(waitRounds = 2, maxRetries = 1, killer = true),
-      "ssl_unverified" -> ExcRule(waitRounds = 1, maxRetries = 0, killer = true)),
-    /** rule for exception classes absent from `exceptionRules` (the
-      * reference's defaultReturnValue: 1h wait, 5 retries, non-killer) */
-    exceptionDefault: ExcRule = ExcRule(waitRounds = 1, maxRetries = 3, killer = false),
     /** body truncation (responseBodyMaxByteSize, FetchData.java:313,331-332):
       * the raw markup is cut at this many chars BEFORE parsing (the
       * reference truncates the response stream) */
@@ -86,13 +71,13 @@ case class CrawlConfig(
       * link gate (frontier-only benchmark; the north metric is URLs
       * scheduled+deduped/sec — the store is the WARC-sink side) */
     storeDocs: Boolean = true,
-    useBloom: Boolean = true,
     /** consolidate the per-round delta blooms into one full filter built
       * distributed from the seen table once this many deltas accumulate */
     bloomMaxDeltas: Int = 12,
     bloomExpected: Long = 4L << 20,
     /** below this seen-size the bloom prefilter is skipped (anti-join alone
-      * is cheaper than building + broadcasting the filter) */
+      * is cheaper than building + broadcasting the filter); Long.MaxValue
+      * turns the bloom bank off */
     bloomMinSeen: Long = 50000L,
     ipSpace: Long = 1L << 20,
     /** multi-agent IP-delay attenuation (StartupConfiguration.java:213-226,
@@ -113,7 +98,6 @@ case class CrawlConfig(
     /** fold the lazy tombstone-delta union chain once it has this many
       * parts (plan-size hygiene between compactions) */
     tombstoneFoldParts: Int = 32,
-    logRounds: Boolean = false,
     /** storage level for in-memory state blocks between snapshots */
     stateStorage: String = "MEMORY_AND_DISK")
 
@@ -166,6 +150,25 @@ case class FetchUnit(
   * complete snapshot and deterministically re-executes rounds after it.
   */
 object Crawler {
+
+  /** Per-host head-window slack beyond `burst`: robots-disallowed /
+    * fetch-filtered URLs among the first `burst + HeadSlack` heads are
+    * skipped within the same round (the reference skips them one at a
+    * time at the queue head); a pathological host with more consecutive
+    * disallowed heads defers the rest to later rounds. */
+  val HeadSlack = 8
+
+  /** Per-exception-class wait/retry/killer tables — static, like the
+    * reference's (ParsingThread.java:75-116). */
+  val ExceptionRules: Map[String, ExcRule] = Map(
+    "socket_timeout" -> ExcRule(waitRounds = 1, maxRetries = 4, killer = false),
+    "connection_closed" -> ExcRule(waitRounds = 1, maxRetries = 2, killer = false),
+    "unknown_host" -> ExcRule(waitRounds = 2, maxRetries = 1, killer = true),
+    "ssl_unverified" -> ExcRule(waitRounds = 1, maxRetries = 0, killer = true))
+
+  /** Rule for exception classes absent from [[ExceptionRules]] (the
+    * reference's defaultReturnValue: 1h wait, 5 retries, non-killer). */
+  val ExceptionDefault: ExcRule = ExcRule(waitRounds = 1, maxRetries = 3, killer = false)
 
   /** Digest-keyed exact-duplicate flags for one round's parsed pages:
     * within-batch (smaller seq wins) + across-rounds against the
@@ -300,7 +303,7 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
 
   /** heads window size: burst + slack for same-round robots/fetch-filter
     * skips at the queue head */
-  private val kHeads = math.max(1, cfg.burst + cfg.headSlack)
+  private val kHeads = math.max(1, cfg.burst + Crawler.HeadSlack)
 
   /** candidate batches at or below this size probe the seen table via a
     * broadcast hash set (scan, no shuffle); above it, sort-merge anti-join */
@@ -312,18 +315,23 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
   private val gatesTrivial =
     cfg.parseFilter == "true" && cfg.followFilter == "true" && cfg.storeFilter == "true"
 
+  /** with robots off and a trivial fetch filter the head gate cannot drop
+    * anything: skip the per-head predicate work entirely (bench path) */
+  private val windowGatesActive = cfg.robotsEnabled || cfg.fetchFilter != "true"
+
+  /** Pending deletions of the append-only frontier: fetched/dropped rows
+    * are tombstoned by hash and physically removed only at
+    * compaction/snapshot. `set` is a lazy union of per-round lc'd deltas
+    * (`parts` of them — folded when the chain gets long); only deltas are
+    * ever re-materialized, never the accumulated set. */
+  private case class Tombstones(set: DataFrame, rows: Long, parts: Int)
+  private def noTombstones = Tombstones(Seq.empty[Long].toDF("urlHash"), 0L, 0)
+
   /** In-memory state threaded between rounds (lineage truncated via
     * localCheckpoint); rebuilt from the last parquet snapshot on resume. */
   private case class LiveState(round: Int, maxSeq: Long, frontSize: Long,
       frontier: DataFrame, hosts: DataFrame, ips: DataFrame,
-      seen: DataFrame, digests: DataFrame,
-      /** append-only frontier: fetched/dropped rows are tombstoned by hash
-        * and physically removed only at compaction/snapshot. `tombstones`
-        * is a lazy union of per-round lc'd deltas (`tombParts` of them —
-        * folded when the chain gets long); only deltas are ever
-        * re-materialized, never the accumulated set. */
-      tombstones: DataFrame, pendingRows: Long, tombRows: Long,
-      tombParts: Int = 0)
+      seen: DataFrame, digests: DataFrame, tombs: Tombstones, pendingRows: Long)
   private var live: Option[LiveState] = None
 
   // ---------------- initialization (round 0) ----------------
@@ -355,16 +363,22 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
     writeState(0, frontier, hosts, ips, maxSeq, cfg.initialFrontSize)
     live = Some(LiveState(0, maxSeq, cfg.initialFrontSize, frontier, hosts, ips,
       frontier.select("urlHash").transform(lc), emptyDigests,
-      emptyTombstones, pendingRows = maxSeq, tombRows = 0L))
+      noTombstones, pendingRows = maxSeq))
   }
 
   private def emptyHosts = spark.emptyDataset[HostState].toDF
   private def emptyIps = spark.emptyDataset[IpState].toDF
   private def emptyDigests = Seq.empty[String].toDF("digest")
-  private def emptyTombstones = Seq.empty[Long].toDF("urlHash")
 
-  /** Narrow frontier row: url + hashes + seq (hostHash keys the visit
-    * state = murmur64(schemeAuthority), BubingJob.java:47-52). */
+  /** Narrow frontier row: url + three hashes + seq. `seq` is the global
+    * first-enqueue order (the sieve's output order, reference
+    * `MercatorSieve.java:349-363`). The row is deliberately NARROW:
+    * schemeAuthority/pathQuery/host are re-derived from `url` only for
+    * the (politeness-bounded) selected burst, so per-round frontier scans
+    * move the minimum bytes (the reference's prefix-omission byte-array
+    * layout, `Frontier.java:118-124`, compresses for the same reason).
+    * `hostHash` = murmur64(schemeAuthority) — the visit-state key AND the
+    * partitioning key (BubingJob.java:47-52). */
   private def toFrontier(newUrls: DataFrame): DataFrame =
     newUrls.select(
       col("url"),
@@ -431,7 +445,7 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
       spark.read.parquet(stateDir(round, "hosts")),
       spark.read.parquet(stateDir(round, "ips")),
       readSeen(round), readDigests(round),
-      emptyTombstones, pendingRows = frontier.count(), tombRows = 0L)
+      noTombstones, pendingRows = frontier.count())
   }
 
   // ---------------- bloom bank (broadcast-refreshed URL-seen filter) ----------------
@@ -458,7 +472,7 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
 
   private def bloomFilters(state: LiveState)
       : Seq[org.apache.spark.broadcast.Broadcast[org.apache.spark.util.sketch.BloomFilter]] = {
-    if (!cfg.useBloom || state.maxSeq < cfg.bloomMinSeen) return Nil
+    if (state.maxSeq < cfg.bloomMinSeen) return Nil
     if (bloomRound != state.round || bloomBank.isEmpty) {
       // cold start / resume: one consolidated filter from the seen table,
       // sized by the ACTUAL seen row count (maxSeq counts every sieved
@@ -483,18 +497,12 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
     bloomBank
   }
 
-  /** Record this round's delta bloom (built distributed, fused onto the
-    * seen write via an observed bloom_agg; null = empty delta) and
-    * consolidate when the bank is long. */
-  private def extendBloom(delta: org.apache.spark.util.sketch.BloomFilter,
-      round: Int): Unit = {
-    if (!cfg.useBloom) return
-    if (bloomRound >= 0 && bloomBank.nonEmpty) {
-      if (delta != null)
-        bloomBank :+= spark.sparkContext.broadcast(delta)
-      if (bloomBank.size > cfg.bloomMaxDeltas) clearBloomBank() // rebuild next round
-    }
-    bloomRound = round
+  /** Add this round's delta bloom (null = empty delta) to the bank and
+    * consolidate when the bank is long. [[commit]] stamps the bank with
+    * the round. */
+  private def extendBloom(delta: org.apache.spark.util.sketch.BloomFilter): Unit = {
+    if (delta != null) bloomBank :+= spark.sparkContext.broadcast(delta)
+    if (bloomBank.size > cfg.bloomMaxDeltas) clearBloomBank() // rebuild next round
   }
 
   private def maxRoundIn(dir: String, complete: String => Boolean): Int = {
@@ -516,34 +524,114 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
 
   // ---------------- per-class exception rule columns ----------------
 
-  private def ruleCol(c: Column, f: ExcRule => Long): Column =
-    cfg.exceptionRules.foldLeft(lit(f(cfg.exceptionDefault))) {
+  private def ruleCol(c: Column, f: ExcRule => Any): Column =
+    Crawler.ExceptionRules.foldLeft(lit(f(Crawler.ExceptionDefault))) {
       case (acc, (name, rule)) => when(c === name, lit(f(rule))).otherwise(acc)
-    }
-  private def killerCol(c: Column): Column =
-    cfg.exceptionRules.foldLeft(lit(cfg.exceptionDefault.killer)) {
-      case (acc, (name, rule)) => when(c === name, lit(rule.killer)).otherwise(acc)
     }
 
   // ---------------- one round ----------------
 
   /** Execute round `round` (state `round-1` from memory or snapshot).
-    * Returns the number of fetch attempts. */
+    * Returns the number of fetch attempts. The phases below are code
+    * structure, not barriers: each builds lazy plans, and the Spark jobs
+    * run at three points — the trace write in [[fetchParse]], the
+    * overlapped tail in [[sieve]], the state materializations here and in
+    * [[commit]]. */
   def runRound(round: Int): Long = {
-    val prev = round - 1
-    val st = live.filter(_.round == prev).getOrElse(loadState(prev))
+    val st = live.filter(_.round == round - 1).getOrElse(loadState(round - 1))
+    val sel = select(st, round)
+    val f = fetchParse(sel.units, round)
+    if (f.count == 0) {
+      commitZeroFetch(st, round, sel)
+      f.cached.unpersist(); sel.selected.unpersist()
+      return 0
+    }
+
+    val (linkSources, docs, newDigests) = store(gates(f.rows), st.digests, f.count)
+    val links = parseLinks(linkSources)
+    val hostsU = hostTransition(
+      if (windowGatesActive) advanceWindowOnly(st.hosts, sel.windowOnlyHosts, round)
+      else st.hosts,
+      f.rows, round)
+    // completed page URLs (any real HTTP status) leave the frontier;
+    // exception URLs stay (retry) unless dropped; disallowed heads leave
+    val tombstoneDelta = f.rows
+      .where(!col("isRobots") && col("excClass").isNull).select("urlHash")
+      .unionByName(sel.disallowed)
+      .unionByName(hostsU.where(col("__drop")).select(col("__dropHash").as("urlHash")))
+
+    var duplicates = 0L
+    var tombs: Tombstones = null
+    val sv = sieve(st, round, links, f, independent = Seq(
+      // (the trace sink already ran — it doubles as the fetch-cache
+      // materialization job, with the round scalars observed on it)
+      () => if (cfg.storeDocs) writeRobots(f.rows, round),
+      () => if (cfg.storeDocs) duplicates = writeDocs(docs, newDigests, round),
+      // materializes the hostsU cache (+ hostAgg broadcast) through the
+      // dropped-URL leg; only the per-round delta (∝ burst) is
+      // materialized, the accumulated set stays a lazy union
+      () => {
+        val delta = lc(tombstoneDelta)
+        tombs = foldTombstones(st.tombs, delta, delta.count())
+      }))
+
+    val dedupOut =
+      if (cfg.maxUrlsPerHost == Long.MaxValue) sv.count else sv.newDelta.count()
+    val hostsNext = hostsU.select(hostCols.map(col): _*)
+      .unionByName(newHostsFrom(sv.newDelta, st.hosts))
+    val ipsNext = ipTransition(st, hostsU, round)
+      .unionByName(newIpsFrom(sv.newDelta, st.ips))
+    val metrics = roundMetrics(f.rows, sv.dedupIn, dedupOut, duplicates)
+
+    // all state materializations + the metrics sink are independent
+    val snap = snapshotDue(round)
+    val frontActive = st.frontSize < Long.MaxValue
+    var hostsMem = hostsNext
+    var ipsMem = ipsNext
+    var digestsLc: DataFrame = null
+    var selHosts = 0L
+    inParallel(
+      () => metrics.write.options(graft.util.FastLocalFs.writeOptions).mode(SaveMode.Overwrite).parquet(appendDir("metrics", round)),
+      () => if (!snap) hostsMem = hostsNext.transform(lc),
+      () => if (!snap) ipsMem = ipsNext.transform(lc),
+      () => if (cfg.storeDocs) digestsLc = newDigests.transform(lc),
+      () => if (frontActive) selHosts = f.rows.select("hostHash").distinct().count())
+
+    // adaptive front growth: a saturated round multiplies the cap
+    val frontSizeNext =
+      if (!frontActive || selHosts < st.frontSize) st.frontSize
+      else {
+        val grown = st.frontSize * cfg.frontGrowth
+        if (grown > 0) grown else Long.MaxValue
+      }
+    commit(LiveState(round, st.maxSeq + sv.count, frontSizeNext,
+      st.frontier.unionByName(sv.newDelta), hostsMem, ipsMem,
+      st.seen.unionByName(sv.input.select("urlHash")),
+      if (cfg.storeDocs) st.digests.unionByName(digestsLc) else st.digests,
+      tombs, st.pendingRows + dedupOut - (tombs.rows - st.tombs.rows)), snap)
+
+    f.cached.unpersist(); sel.selected.unpersist()
+    links.unpersist(); hostsU.unpersist()
+    if (cfg.storeDocs) docs.unpersist()
+    f.count
+  }
+
+  /** One round's fetch selection. `selected` is cached (unpersist at round
+    * end); `disallowed` holds the hashes of the heads the window gate
+    * dropped and `windowOnlyHosts` the hosts whose whole window it
+    * dropped. */
+  private case class Selection(selected: DataFrame, units: Dataset[FetchUnit],
+      disallowed: DataFrame, windowOnlyHosts: DataFrame)
+
+  /** Politeness selection (SURVEY.md §2.5 workbench) and the fetch units of
+    * the selected hosts: robots.txt first, then the gated head window. */
+  private def select(st: LiveState, round: Int): Selection = {
     // pending view: append-only frontier minus tombstoned (fetched/dropped)
     // rows; broadcast anti-join = scan-side filter, no frontier shuffle
     val frontier =
-      if (st.tombRows == 0) st.frontier
-      else st.frontier.join(broadcast(st.tombstones), Seq("urlHash"), "left_anti")
-    val hosts = st.hosts
-    val ips = st.ips
-    val seen = st.seen
-    val maxSeq = st.maxSeq
-    val now = round.toLong
+      if (st.tombs.rows == 0) st.frontier
+      else st.frontier.join(broadcast(st.tombs.set), Seq("urlHash"), "left_anti")
 
-    // --- politeness selection (SURVEY.md §2.5 workbench) ---
     // ONE pass over the frontier: per-host head window (k' smallest seqs)
     // via hash aggregation with map-side combine — the shuffle carries at
     // most k' narrow rows per host per partition; no window sort, no
@@ -553,9 +641,9 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
     val heads = frontier.groupBy("hostHash")
       .agg(topk_heads(col("seq"), col("url"), col("urlHash"), kHeads).as("heads"))
 
-    val nowC = ref_long(now, "now")
-    val ipReady = ips.where(col("nextFetch") <= nowC).select("ipHash")
-    val eligible = hosts
+    val nowC = ref_long(round.toLong, "now")
+    val ipReady = st.ips.where(col("nextFetch") <= nowC).select("ipHash")
+    val eligible = st.hosts
       .where(!col("purged") && col("nextFetch") <= nowC)
       .join(heads, Seq("hostHash")) // inner: only hosts with pending work
       .join(ipReady.hint("broadcast"), Seq("ipHash"), "left_semi")
@@ -578,23 +666,19 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
         col("w.r.robotsPrefixes").as("robotsPrefixes"),
         col("w.r.robotsDone").as("robotsDone"), col("w.r.heads").as("heads"))
     // adaptive front sizing (Frontier.java:824-835): cap the in-flight IP
-    // set; grown in the commit phase when a round saturates it
-    val frontActive = st.frontSize < Long.MaxValue
-    // cached: the selection pipeline (heads agg + rank-1) feeds both the
-    // robots and the page branch — without the cache the frontier
-    // aggregation would execute once per branch
+    // set; grown at commit when a round saturates it. Cached: the
+    // selection pipeline (heads agg + rank-1) feeds both the robots and
+    // the page branch — without the cache the frontier aggregation would
+    // execute once per branch
     val selected =
-      (if (frontActive)
+      (if (st.frontSize < Long.MaxValue)
         rank1.orderBy("priority").limit(math.min(st.frontSize, Int.MaxValue.toLong).toInt)
       else rank1).cache()
 
     // robots.txt jumps the host queue (VisitState.java:193-216)
     val attemptCol =
       when(col("lastError").isNull, lit(0)).otherwise(col("retries") + 1).as("attempt")
-    val robotsHosts = selected.where(!col("robotsDone"))
-    val pageHosts = selected.where(col("robotsDone"))
-
-    val robotsUnits = robotsHosts.select(
+    val robotsUnits = selected.where(!col("robotsDone")).select(
       concat(col("schemeAuthority"), lit("/robots.txt")).as("url"),
       col("schemeAuthority"),
       burl_host(col("schemeAuthority")).as("host"),
@@ -616,9 +700,7 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
         respects_robots(burl_path_query(u), col("robotsPrefixes"))) &&
         FilterDsl.compile(cfg.fetchFilter, FilterDsl.urlContext(u))
     }
-    // with robots off and a trivial fetch filter the head gate cannot drop
-    // anything: skip the per-head predicate work entirely (bench path)
-    val windowGatesActive = cfg.robotsEnabled || cfg.fetchFilter != "true"
+    val pageHosts = selected.where(col("robotsDone"))
     val gated =
       if (windowGatesActive) pageHosts
         .withColumn("__kept", filter(col("heads"), h => headKeep(h)))
@@ -628,10 +710,6 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
         .withColumn("__dropped", slice(col("heads"), lit(1), lit(0)))
     val disallowed = gated
       .select(explode(col("__dropped")).as("h")).select(col("h.urlHash").as("urlHash"))
-    /** hosts whose ENTIRE head window was disallowed this round: they did
-      * consume their window, so their nextFetch advances like a fetch
-      * (otherwise an all-disallowed window repeats forever); mirrored in
-      * OracleCrawler.windowOnly */
     val windowOnlyHosts = gated
       .where(size(col("__kept")) === 0 && size(col("__dropped")) > 0)
       .select("hostHash")
@@ -654,11 +732,22 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
     val units = robotsUnits.unionByName(pageUnits)
       .repartition(cfg.statePartitions * 4, col("urlHash"))
       .as[FetchUnit]
+    Selection(selected, units, disallowed, windowOnlyHosts)
+  }
 
-    // --- synthetic fetch + REAL parse (typed Dataset map; pure functions):
-    // the page is rendered to markup and run through HtmlParser — links,
-    // spans, and digest come from the markup, as in the reference
-    // ParsingThread -> HTMLParser path ---
+  /** One round's fetch batch. `cached` is the typed fetch cache (unpersist
+    * at round end), `rows` its burst-aborted view; the scalars come from
+    * the trace-write Observation: attempt count, raw-outlink upper bound,
+    * and the seq bounds that drive the deterministic rank buckets. */
+  private case class Fetched(cached: Dataset[FetchResult], rows: DataFrame,
+      count: Long, linksUpper: Long, loSeq: Long, hiSeq: Long)
+
+  /** Synthetic fetch + REAL parse (typed Dataset map; pure functions): the
+    * page is rendered to markup and run through HtmlParser — links, spans,
+    * and digest come from the markup, as in the reference ParsingThread ->
+    * HTMLParser path. Runs ONE job: the trace sink. */
+  private def fetchParse(units: Dataset[FetchUnit], round: Int): Fetched = {
+    // the map closure captures these locals only, never the Crawler
     val webCfg = cfg.web
     val maxBody = cfg.maxBodyChars
     val rnd = round
@@ -734,105 +823,116 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
         sum("nLinks").as("nl")) // raw-outlink upper bound, sizes the batch bloom
       .drop("nLinks")
       .write.options(graft.util.FastLocalFs.writeOptions).mode(SaveMode.Overwrite).parquet(appendDir("trace", round))
-    val obsRow = traceObs.get
-    val fetchedCount = obsRow("cnt").asInstanceOf[Long]
-    val linksUpper = obsRow("nl") match {
+    val obs = traceObs.get
+    def long(key: String): Long = obs(key) match {
       case null => 0L
       case l: java.lang.Long => l.longValue()
     }
-    if (fetchedCount == 0) {
-      val disLc = if (windowGatesActive) disallowed.transform(lc) else null
-      val disRows = if (disLc == null) 0L else disLc.count()
-      if (disRows == 0) {
-        // politeness wait: carry state forward, snapshot on cadence
-        val snapped = maybeSnapshot(round, frontier, hosts, ips, maxSeq, st.frontSize, force = false)
-        live = Some(
-          if (snapped)
-            st.copy(round = round,
-              frontier = spark.read.parquet(stateDir(round, "frontier")),
-              tombstones = emptyTombstones, tombRows = 0L, tombParts = 0)
-          else st.copy(round = round))
-      } else {
-        // zero fetches but the head gate DID drop URLs: commit the window
-        // tombstones and advance the all-disallowed hosts' nextFetch, or
-        // the identical empty round would repeat until maxRounds
-        // (mirrored in OracleCrawler)
-        val hostDelayRef0 = ref_long(now + cfg.hostDelay, "nowHostDelay")
-        val hostsNext = hosts
-          .join(broadcast(windowOnlyHosts.withColumn("__wo", lit(true))), Seq("hostHash"), "left")
-          .withColumn("nextFetch",
-            when(coalesce(col("__wo"), lit(false)), hostDelayRef0).otherwise(col("nextFetch")))
-          .drop("__wo")
-        // lazy union with the (already lc'd) disallowed delta — the
-        // accumulated tombstone set is never re-materialized; fold the
-        // union chain when it gets long (same plan-size hygiene as the
-        // fetch path — a streak of zero-fetch disallowed rounds would
-        // otherwise grow it unboundedly)
-        val (tombstonesNext, tombPartsNext0) =
-          if (st.tombParts >= cfg.tombstoneFoldParts) (lc(st.tombstones.unionByName(disLc)), 1)
-          else (st.tombstones.unionByName(disLc), st.tombParts + 1)
-        val tombRowsNext = st.tombRows + disRows
-        lazy val compactedNext = compactFrontier(st.frontier, tombstonesNext, tombRowsNext)
-        val snapped = maybeSnapshot(round, compactedNext, hostsNext, ips, maxSeq,
-          st.frontSize, force = false)
-        val (fNext, tombNext, tombRowsFinal, tombPartsFinal) =
-          if (snapped) (spark.read.parquet(stateDir(round, "frontier")), emptyTombstones, 0L, 0)
-          else if (tombRowsNext >= cfg.tombstoneCompactRows)
-            (compactedNext.repartition(cfg.statePartitions * 4, col("hostHash")).transform(lc),
-              emptyTombstones, 0L, 0)
-          else (st.frontier, tombstonesNext, tombRowsNext, tombPartsNext0)
-        val hNext =
-          if (snapped) spark.read.parquet(stateDir(round, "hosts"))
-          else hostsNext.transform(lc)
-        live = Some(st.copy(round = round, frontier = fNext, hosts = hNext,
-          tombstones = tombNext, pendingRows = st.pendingRows - disRows,
-          tombRows = tombRowsFinal, tombParts = tombPartsFinal))
-      }
-      bloomRound = round
-      fetched0.unpersist(); selected.unpersist()
-      return 0
+    Fetched(fetched0, fetched, long("cnt"), long("nl"), long("lo"), long("hi"))
+  }
+
+  /** A round that fetched nothing. With no dropped heads either it is a
+    * politeness wait and the state carries forward. Otherwise the head gate
+    * DID drop URLs: commit their tombstones and advance the all-disallowed
+    * hosts' nextFetch, or the identical empty round would repeat until
+    * maxRounds (mirrored in OracleCrawler). Nothing but the trace is
+    * appended. */
+  private def commitZeroFetch(st: LiveState, round: Int, sel: Selection): Unit = {
+    val snap = snapshotDue(round)
+    val dropped = if (windowGatesActive) sel.disallowed.transform(lc) else null
+    val droppedRows = if (dropped == null) 0L else dropped.count()
+    if (droppedRows == 0) commit(st.copy(round = round), snap)
+    else {
+      val hosts = advanceWindowOnly(st.hosts, sel.windowOnlyHosts, round)
+      commit(st.copy(round = round,
+        hosts = if (snap) hosts else hosts.transform(lc),
+        tombs = foldTombstones(st.tombs, dropped, droppedRows),
+        pendingRows = st.pendingRows - droppedRows), snap)
     }
+  }
 
-    // --- response filter gates (parse/follow/store, ParsingThread.java:343,359,398) ---
-    val pages0 = fetched.where(!col("isRobots") && col("status") === 200)
+  /** Response filter gates (parse/follow/store,
+    * ParsingThread.java:343,359,398) over the round's parsed pages. */
+  private def gates(fetched: DataFrame): DataFrame = {
+    val pages = fetched.where(!col("isRobots") && col("status") === 200)
+    if (gatesTrivial) return pages.withColumn("__store", lit(true))
     val emptySpans = lit(null).cast("array<struct<kind:string,text:string,media_ref:string,offset:int>>")
-    val pages =
-      if (gatesTrivial) pages0.withColumn("__store", lit(true))
-      else {
-        val respCtx = FilterDsl.urlContext(col("url")).copy(
-          contentType = Some(col("contentType")),
-          status = Some(col("status")),
-          text = Some(array_join(transform(col("spans"), s => s.getField("text")), " ")),
-          digest = Some(col("digest")),
-          isHttpResponse = Some(lit(true)))
-        pages0
-          .withColumn("__parse", FilterDsl.compile(cfg.parseFilter, respCtx))
-          .withColumn("__follow", FilterDsl.compile(cfg.followFilter, respCtx))
-          .withColumn("__store", FilterDsl.compile(cfg.storeFilter, respCtx))
-          .withColumn("digest", when(col("__parse"), col("digest")).otherwise(col("binaryDigest")))
-          .withColumn("spans", when(col("__parse"), col("spans")).otherwise(emptySpans))
-          .withColumn("links",
-            when(col("__parse") && col("__follow"), col("links"))
-              .otherwise(lit(null).cast("array<string>")))
-      }
+    val respCtx = FilterDsl.urlContext(col("url")).copy(
+      contentType = Some(col("contentType")),
+      status = Some(col("status")),
+      text = Some(array_join(transform(col("spans"), s => s.getField("text")), " ")),
+      digest = Some(col("digest")),
+      isHttpResponse = Some(lit(true)))
+    pages
+      .withColumn("__parse", FilterDsl.compile(cfg.parseFilter, respCtx))
+      .withColumn("__follow", FilterDsl.compile(cfg.followFilter, respCtx))
+      .withColumn("__store", FilterDsl.compile(cfg.storeFilter, respCtx))
+      .withColumn("digest", when(col("__parse"), col("digest")).otherwise(col("binaryDigest")))
+      .withColumn("spans", when(col("__parse"), col("spans")).otherwise(emptySpans))
+      .withColumn("links",
+        when(col("__parse") && col("__follow"), col("links"))
+          .otherwise(lit(null).cast("array<string>")))
+  }
 
-    // --- store: digest-keyed exact duplicate detection + docs sink ---
-    // (digests cover ALL parsed pages; the store filter gates only the sink)
-    val digestsSeen = st.digests
-    val (linkSources, docs, newDigests) = if (cfg.storeDocs) {
+  /** Store side: digest-keyed exact duplicate detection. Digests cover ALL
+    * parsed pages; the store filter gates only the sink. Returns (link
+    * sources, docs — cached when the store is on, new digests). */
+  private def store(pages: DataFrame, digestsSeen: DataFrame,
+      fetchedCount: Long): (DataFrame, DataFrame, DataFrame) =
+    if (!cfg.storeDocs) (pages, pages.limit(0), emptyDigests)
+    else {
       val flagged = Crawler
         .flagDuplicates(pages, digestsSeen, probe = fetchedCount <= ProbeThreshold)
         .cache()
-      val nd = flagged.where(!col("is_duplicate")).select("digest").distinct()
       // duplicate pages contribute no outlinks (ParsingThread.java:408-410)
-      (flagged.where(!col("is_duplicate")), flagged, nd)
-    } else (pages, pages.limit(0), emptyDigests)
+      (flagged.where(!col("is_duplicate")), flagged,
+        flagged.where(!col("is_duplicate")).select("digest").distinct())
+    }
 
-    // independent sinks + the link-batch materialization, overlapped
-    var duplicates = 0L
-    var dedupIn = 0L
+  /** Robots store sink (the robots WARC stream, ParsingThread.java:325-327):
+    * every robots.txt response. */
+  private def writeRobots(fetched: DataFrame, round: Int): Unit =
+    fetched
+      .where(col("isRobots"))
+      .select(col("url"), col("schemeAuthority"), col("status"),
+        col("excClass"), col("robotsPrefixes"))
+      .write.options(graft.util.FastLocalFs.writeOptions).mode(SaveMode.Overwrite).parquet(appendDir("robots_fetches", round))
 
-    // --- outlink extraction -> schedule filter -> sieve (SURVEY.md §3.2) ---
+  /** Docs + digests sinks; returns the round's duplicate count. The
+    * duplicates telemetry rides the docs write as an observed aggregate
+    * BELOW the store filter (all flagged pages flow through the metrics
+    * point) — no separate count job over the batch. */
+  private def writeDocs(docs: DataFrame, newDigests: DataFrame, round: Int): Long = {
+    val dupObs = org.apache.spark.sql.Observation()
+    docs
+      .observe(dupObs,
+        sum(col("is_duplicate").cast("long")).as("dups"))
+      .where(col("__store"))
+      .select(col("url").as("doc_id"), col("schemeAuthority"), col("spans"),
+        col("digest"), col("status"), col("is_duplicate"), col("truncated"),
+        col("guessedCharset").as("guessed_charset"),
+        size(coalesce(col("links"), array())).as("n_links"),
+        // external outdegree: links whose host differs from the page's.
+        // DELIBERATE DEVIATION from ParsingThread.java:386-389, which
+        // counts a null-host (unparseable-host) link as external
+        // (!currentHost.equals(null-host) is true); here `=!=` is
+        // null-false, so such links are EXCLUDED — chosen for ANSI-SQL
+        // oracle expressibility (null-safe inequality round-trips
+        // through DuckDB; the reference's null-is-external does not)
+        size(filter(coalesce(col("links"), array()),
+          l => burl_host(l) =!= burl_host(col("url"))))
+          .as("n_links_ext")) // round = partition dir
+      .write.options(graft.util.FastLocalFs.writeOptions).mode(SaveMode.Overwrite).parquet(appendDir("docs", round))
+    newDigests.write.options(graft.util.FastLocalFs.writeOptions).mode(SaveMode.Overwrite).parquet(appendDir("digests", round))
+    dupObs.get("dups") match {
+      case null => 0L
+      case l: java.lang.Long => l.longValue()
+    }
+  }
+
+  /** Outlink extraction -> schedule filter -> blacklists (SURVEY.md §3.2):
+    * the sieve's candidate batch, cached (unpersist at round end). */
+  private def parseLinks(linkSources: DataFrame): DataFrame = {
     // link-typed schedule-filter context (the reference filters
     // Filter<Link> over (source, target), ParsingThread.java:181-184,
     // Link.java:26-39): the parent host column rides along only when the
@@ -852,7 +952,7 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
     val schedCtx =
       if (linkTyped) schedCtx0.copy(srcHost = Some(col("srcHost")), dstHost = schedCtx0.host)
       else schedCtx0
-    val parsedLinks = rawLinks
+    rawLinks
       .withColumn("url", burl_parse(col("spec")))
       .where(col("url").isNotNull)
       .where(FilterDsl.compile(cfg.scheduleFilter, schedCtx))
@@ -860,8 +960,29 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
       .withColumn("urlHash", murmur64(col("url")))
       .select("url", "urlHash", "parentSeq", "linkIdx")
       .cache()
+  }
 
-    // --- per-host state machine (reference ParsingThread.java:253-312) ---
+  /** Hosts whose ENTIRE head window was disallowed consumed their window
+    * without a fetch: their nextFetch advances like a fetch (otherwise an
+    * all-disallowed window repeats forever); mirrored in
+    * OracleCrawler.windowOnly. */
+  private def advanceWindowOnly(hosts: DataFrame, windowOnlyHosts: DataFrame,
+      round: Int): DataFrame =
+    hosts
+      .join(broadcast(windowOnlyHosts.withColumn("__wo", lit(true))), Seq("hostHash"), "left")
+      .withColumn("nextFetch",
+        when(coalesce(col("__wo"), lit(false)), ref_long(round + cfg.hostDelay, "nowHostDelay"))
+          .otherwise(col("nextFetch")))
+      .drop("__wo")
+
+  private val hostCols = Seq("schemeAuthority", "hostHash", "ipHash", "nextFetch", "stored",
+    "robotsDone", "purged", "retries", "lastError", "robotsPrefixes")
+
+  /** Per-host state machine (reference ParsingThread.java:253-312): the
+    * host rows after this round's fetches, plus `__t` (touched), `__drop`
+    * and `__dropHash` (the URL an exhausted non-killer class drops).
+    * Cached (unpersist at round end). */
+  private def hostTransition(hosts: DataFrame, fetched: DataFrame, round: Int): DataFrame = {
     val hostAgg = fetched.groupBy("hostHash").agg(
       sum(when(!col("isRobots") && col("excClass").isNull && col("status") === 200, 1L)
         .otherwise(0L)).as("__stored"),
@@ -886,10 +1007,8 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
       .when(lastAfterOk.isNull, lit(0))
       .when(lastAfterOk === excC, col("retries") + 1)
       .otherwise(col("retries"))
-    val waitC = ruleCol(excC, _.waitRounds)
-    val maxRetC = ruleCol(excC, _.maxRetries.toLong)
-    val killC = killerCol(excC)
-    val retryable = retriesNew < maxRetC
+    val retryable = retriesNew < ruleCol(excC, _.maxRetries.toLong)
+    val killC = ruleCol(excC, _.killer)
     // purge: killer class exhausted, or ANY repeated robots error
     // (ParsingThread.java:299-302), or the per-host budget reached
     val purgeByExc = excC.isNotNull && !retryable && (killC || excIsRobots)
@@ -898,23 +1017,15 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
     // all transition columns are computed against the ORIGINAL host row in
     // one select (no withColumn chains — later columns must not see
     // earlier overwrites)
-    val nowRef = ref_long(now, "now")
-    val hostDelayRef = ref_long(now + cfg.hostDelay, "nowHostDelay")
-    val backoff = nowRef + waitC * pow(lit(2.0), retriesNew.cast("double")).cast("long")
+    val hostDelayRef = ref_long(round + cfg.hostDelay, "nowHostDelay")
+    val backoff = ref_long(round.toLong, "now") +
+      ruleCol(excC, _.waitRounds) * pow(lit(2.0), retriesNew.cast("double")).cast("long")
     val storedNew = col("stored") + coalesce(col("__stored"), lit(0L))
-    // all-disallowed-window hosts consumed their window without a fetch:
-    // their nextFetch advances like a fetch (disjoint from hostAgg — such
-    // a host produced no fetch units)
-    val hostsBase =
-      if (windowGatesActive)
-        hosts.join(broadcast(windowOnlyHosts.withColumn("__wo", lit(true))), Seq("hostHash"), "left")
-      else hosts.withColumn("__wo", lit(false))
-    val hostsU = hostsBase
+    hosts
       .join(broadcast(hostAgg.withColumn("__touched", lit(true))), Seq("hostHash"), "left")
       .select(
         col("schemeAuthority"), col("hostHash"), col("ipHash"),
-        when(touched.isNull,
-            when(coalesce(col("__wo"), lit(false)), hostDelayRef).otherwise(col("nextFetch")))
+        when(touched.isNull, col("nextFetch"))
           .when(excC.isNull, hostDelayRef)
           .when(retryable, backoff)
           .otherwise(hostDelayRef).as("nextFetch"),
@@ -934,201 +1045,22 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
         when(coalesce(touched && dropUrl, lit(false)),
           col("__exc").getField("urlHash")).as("__dropHash"))
       .cache()
+  }
 
-    val droppedUrls = hostsU.where(col("__drop")).select(col("__dropHash").as("urlHash"))
-    val hostCols = Seq("schemeAuthority", "hostHash", "ipHash", "nextFetch", "stored",
-      "robotsDone", "purged", "retries", "lastError", "robotsPrefixes")
-
-    // --- state deltas ---
-    // completed page URLs (any real HTTP status) leave the frontier;
-    // exception URLs stay (retry) unless dropped; disallowed heads leave
-    val completedUrls = fetched
-      .where(!col("isRobots") && col("excClass").isNull).select("urlHash")
-    val tombstoneDelta = completedUrls.unionByName(disallowed).unionByName(droppedUrls)
-
-    val blooms = bloomFilters(st)
-    // delta blooms extend an EXISTING bank (cold-start rounds build the
-    // consolidated filter instead next round)
-    val wantDeltaBloom = cfg.useBloom && bloomRound >= 0 && bloomBank.nonEmpty
-    // parentSeq bounds of this round's links drive the deterministic rank
-    // buckets (from the trace-write Observation's scalars)
-    val (loSeq, hiSeq) = obsRow("lo") match {
-      case null => (0L, 0L)
-      case l: java.lang.Long => (l.longValue(), obsRow("hi").asInstanceOf[Long])
-    }
-
-    // --- overlapped round tail, DEPENDENCY-driven (no phase barrier):
-    // the sinks, host/tomb state folds, and the SIEVE CHAIN are mutually
-    // independent DAG branches; the rank chain, seen append, and delta
-    // bloom need ONLY the materialized sieve output. r3/r4 ran these as
-    // two barriered phases, so the rank/seen/bloom start also waited on
-    // the docs sink and the state folds — each phase tail ran its longest
-    // branch alone while the rest of the executor idled (the r4 floor
-    // decomposition pins occupancy — 0.64 at 16t vs 0.84 at 4t — as the
-    // one engine-controllable efficiency term). Here the dependents
-    // launch the moment the sieve gate completes. ---
-    var sievedInput: DataFrame = null
-    var tombstonesNext: DataFrame = null
-    var tombRowsNext = 0L
-    var tombPartsNext = 0
-    var sieved: DataFrame = null
-    var sieveOut = 0L
-    var newDelta: DataFrame = null
-    inParallelStaged(independent = Seq(
-      // (the trace sink already ran — it doubles as the fetch-cache
-      // materialization job, with the round scalars observed on it)
-      // robots store sink (the robots WARC stream,
-      // ParsingThread.java:325-327): every robots.txt response
-      () => if (cfg.storeDocs) fetched
-        .where(col("isRobots"))
-        .select(col("url"), col("schemeAuthority"), col("status"),
-          col("excClass"), col("robotsPrefixes"))
-        .write.options(graft.util.FastLocalFs.writeOptions).mode(SaveMode.Overwrite).parquet(appendDir("robots_fetches", round)),
-      () => if (cfg.storeDocs) {
-        // the duplicates telemetry rides the docs write as an observed
-        // aggregate BELOW the store filter (all flagged pages flow through
-        // the metrics point) — no separate count job over the batch
-        val dupObs = org.apache.spark.sql.Observation()
-        docs
-          .observe(dupObs,
-            sum(col("is_duplicate").cast("long")).as("dups"))
-          .where(col("__store"))
-          .select(col("url").as("doc_id"), col("schemeAuthority"), col("spans"),
-            col("digest"), col("status"), col("is_duplicate"), col("truncated"),
-            col("guessedCharset").as("guessed_charset"),
-            size(coalesce(col("links"), array())).as("n_links"),
-            // external outdegree: links whose host differs from the page's.
-            // DELIBERATE DEVIATION from ParsingThread.java:386-389, which
-            // counts a null-host (unparseable-host) link as external
-            // (!currentHost.equals(null-host) is true); here `=!=` is
-            // null-false, so such links are EXCLUDED — chosen for ANSI-SQL
-            // oracle expressibility (null-safe inequality round-trips
-            // through DuckDB; the reference's null-is-external does not)
-            size(filter(coalesce(col("links"), array()),
-              l => burl_host(l) =!= burl_host(col("url"))))
-              .as("n_links_ext")) // round = partition dir
-          .write.options(graft.util.FastLocalFs.writeOptions).mode(SaveMode.Overwrite).parquet(appendDir("docs", round))
-        duplicates = dupObs.get("dups") match {
-          case null => 0L
-          case l: java.lang.Long => l.longValue()
-        }
-        newDigests.write.options(graft.util.FastLocalFs.writeOptions).mode(SaveMode.Overwrite).parquet(appendDir("digests", round))
-      },
-      // host-state update (materializes the hostsU cache + hostAgg
-      // broadcast) and the tombstone DELTA fold — both independent of the
-      // sieve. Only the per-round delta (∝ burst) is materialized; the
-      // accumulated set stays a lazy union of already-lc'd blocks —
-      // re-materializing the whole union here was an O(accumulated
-      // tombstones) copy per round, a cost that grows with the crawl.
-      () => {
-        val deltaLc = lc(tombstoneDelta)
-        val deltaRows = deltaLc.count() // cheap: counts the lc'd blocks
-        if (st.tombParts >= cfg.tombstoneFoldParts) {
-          // plan-size hygiene: fold a long union chain (politeness-heavy
-          // crawls accumulate many small deltas between compactions)
-          tombstonesNext = lc(st.tombstones.unionByName(deltaLc))
-          tombPartsNext = 1
-        } else {
-          tombstonesNext = st.tombstones.unionByName(deltaLc)
-          tombPartsNext = st.tombParts + 1
-        }
-        tombRowsNext = st.tombRows + deltaRows
-      }),
-      // link batch + sieve (the GATE): the seen store is only ever
-      // SCANNED, never shuffled/sorted/broadcast (scan-probe; the r2 SMJ
-      // path re-shuffled all accumulated seen hashes every round). The
-      // candidate count and the batch bloom come out of ONE aggregation
-      // over the link cache (bloom_agg riding the count job) — separately
-      // they cost two full passes over the widest per-round stream.
-      gate = () => {
-        if (blooms.nonEmpty) {
-          val (c, bb) = Sieve.bloomAggParallel(parsedLinks, "urlHash",
-            math.max(linksUpper, 1024L), Sieve.BatchBloomFpp, bloomMergeGroups)
-          dedupIn = c
-          sievedInput = Sieve.newUrlsScanProbe(parsedLinks, seen,
-            Seq("parentSeq", "linkIdx"), blooms, lc,
-            broadcastLimit = ProbeThreshold,
-            candidateCount = dedupIn, seenCount = maxSeq,
-            prebuiltBatchBloom = bb)
-        } else {
-          dedupIn = parsedLinks.count()
-          sievedInput = Sieve
-            .newUrls(parsedLinks, seen, Seq("parentSeq", "linkIdx"), Nil,
-              broadcastProbe = dedupIn <= ProbeThreshold)
-            .transform(lc)
-        }
-      },
-      // rank assignment + frontier delta (the sequential rank chain),
-      // the seen append, and the delta bloom — all three consume only
-      // sievedInput and start the moment the gate completes
-      dependents = Seq(
-      () => {
-        // 8x-oversplit buckets: parentSeq density is uneven (popular hosts
-        // sit at low seqs), so fine-grained monotone buckets keep the rank
-        // window's tasks balanced. First new seq is exactly maxSeq (dense
-        // continuation of enqueue order).
-        val r = Sieve.assignSeq(
-          sievedInput, Seq("parentSeq", "linkIdx"), startSeq = maxSeq - 1L,
-          Sieve.linearBuckets(col("parentSeq"), loSeq, hiSeq, math.max(8, cfg.statePartitions * 8)))
-        sieved = r._1
-        sieveOut = r._2
-        // budget: enforced at sieve exit like Frontier.append (Frontier.java:810-814)
-        val newFrontierAll = toFrontier(sieved.select("url", "urlHash", "seq"))
-        val newFrontier = (if (cfg.maxUrlsPerHost == Long.MaxValue) newFrontierAll
-          else {
-            val withStored = newFrontierAll
-              .join(hosts.select("hostHash", "stored"), Seq("hostHash"), "left")
-              .na.fill(0L, Seq("stored"))
-            val k = math.min(cfg.maxUrlsPerHost, Int.MaxValue.toLong).toInt
-            Ranking.topKPerKey(withStored, "hostHash", Seq("seq"), k, rankCol = "__r")
-              .where(col("stored") + col("__r") <= cfg.maxUrlsPerHost)
-              .drop("__r", "stored")
-          })
-        // (measured: repartitioning the delta by hostHash here costs more
-        // shuffle bytes than the heads aggregation's partial buffers save
-        // — the delta rows outnumber hosts; the frontier is re-clustered
-        // by hostHash only at compaction/snapshot)
-        newDelta = lc(newFrontier.select(st.frontier.columns.map(col): _*))
-      },
-      // seen append: ALL sieved urls (even budget-dropped ones are "seen"
-      // — the reference sieve recorded them before append()'s budget
-      // re-check)
-      () => sievedInput.select("urlHash")
-        .write.options(graft.util.FastLocalFs.writeOptions).mode(SaveMode.Overwrite).parquet(appendDir("seen", round)),
-      // per-round DELTA bloom (sized by dedupIn, an upper bound on the
-      // delta): a plain bloom_agg AGGREGATION job over the lc'd sieve
-      // output — partial filters merge executor-side through the
-      // aggregation exchange and ONE merged filter reaches the driver.
-      // (An Observation on the seen write was tried and reverted: observed
-      // metrics ship every task's full-size partial buffer in its task
-      // result, O(tasks x filterSize) to the driver — at cluster partition
-      // counts that exceeds maxResultSize; this shape scales, and the job
-      // overlaps the rank chain in this phase anyway.)
-      () => {
-        if (wantDeltaBloom && dedupIn > 0) {
-          val (_, bf) = Sieve.bloomAggParallel(sievedInput, "urlHash",
-            math.max(dedupIn, 1024L), BloomFpp, bloomMergeGroups)
-          extendBloom(bf, round)
-        } else extendBloom(null, round)
-      }))
-
-    val frontierNext = st.frontier.unionByName(newDelta)
-    val dedupOut =
-      if (cfg.maxUrlsPerHost == Long.MaxValue) sieveOut else newDelta.count()
-
-    val hostsNext = hostsU.select(hostCols.map(col): _*)
-      .unionByName(newHostsFrom(newDelta, hosts))
-    // touched IPs from the (cached) host aggregate instead of a fresh
-    // scan+distinct of `fetched`: selection is rank-1 per IP, so touched
-    // hosts already have pairwise-distinct IPs
+  /** Per-IP politeness after the round: touched IPs wait `ipDelay`, scaled
+    * by the multi-agent model when it is on. Touched IPs come from the
+    * (cached) host transition instead of a fresh scan+distinct of the
+    * fetch batch: selection is rank-1 per IP, so touched hosts already
+    * have pairwise-distinct IPs. */
+  private def ipTransition(st: LiveState, hostsU: DataFrame, round: Int): DataFrame = {
     val ipTouched = hostsU.where(col("__t")).select("ipHash")
-    val ipsBase = ips
+    val ipsBase = st.ips
       .join(broadcast(ipTouched.withColumn("__hit", lit(true))), Seq("ipHash"), "left")
-    val ipsUpdated =
+    val updated =
       if (cfg.knownAgents > 1 && cfg.ipDelayFactor != 0) {
         // multi-agent IP-delay model (ParsingThread.java:271-274): delay
         // scales with the pre-round count k of non-purged hosts on the IP
-        val kCounts = hosts.where(!col("purged"))
+        val kCounts = st.hosts.where(!col("purged"))
           .join(broadcast(ipTouched), Seq("ipHash"), "left_semi")
           .groupBy("ipHash").agg(count(lit(1)).as("__k"))
         val k = coalesce(col("__k"), lit(1L)).cast("double")
@@ -1137,18 +1069,111 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
             .cast("long"))
         ipsBase.join(broadcast(kCounts), Seq("ipHash"), "left")
           .withColumn("nextFetch",
-            when(col("__hit"), ref_long(now, "now") + delayEff).otherwise(col("nextFetch")))
+            when(col("__hit"), ref_long(round.toLong, "now") + delayEff).otherwise(col("nextFetch")))
           .drop("__k")
       } else ipsBase
         .withColumn("nextFetch",
-          when(col("__hit"), ref_long(now + cfg.ipDelay, "nowIpDelay")).otherwise(col("nextFetch")))
-    val ipsNext = ipsUpdated
-      .drop("__hit")
-      .unionByName(newIpsFrom(newDelta, ips))
+          when(col("__hit"), ref_long(round + cfg.ipDelay, "nowIpDelay")).otherwise(col("nextFetch")))
+    updated.drop("__hit")
+  }
 
-    // --- per-partition lineage + metrics (north_rule): per-partition rows
-    // carry only per-partition quantities; round-global quantities live on
-    // ONE partition_id=-1 row ---
+  /** Sieve output: `input` is the lc'd new-URL batch (pre-budget, all of it
+    * is "seen"), `count` its size, `newDelta` the lc'd frontier rows that
+    * survive the budget. */
+  private case class Sieved(input: DataFrame, dedupIn: Long, count: Long, newDelta: DataFrame)
+
+  /** The overlapped round tail, DEPENDENCY-driven (no phase barrier): the
+    * caller's `independent` sinks and state folds run alongside the SIEVE
+    * (the gate), and the rank chain, seen append, and delta bloom — which
+    * need ONLY the materialized sieve output — launch the moment it
+    * completes. A barrier here made every phase tail run its longest
+    * branch alone while the rest of the executor idled (occupancy 0.64 at
+    * 16t vs 0.84 at 4t). */
+  private def sieve(st: LiveState, round: Int, links: DataFrame, f: Fetched,
+      independent: Seq[() => Unit]): Sieved = {
+    val order = Seq("parentSeq", "linkIdx")
+    val blooms = bloomFilters(st)
+    var dedupIn = 0L
+    var input: DataFrame = null
+    var out = 0L
+    var newDelta: DataFrame = null
+    inParallelStaged(independent,
+      // the seen store is only ever SCANNED, never shuffled/sorted/
+      // broadcast (scan-probe; an SMJ re-shuffles all accumulated seen
+      // hashes every round). The candidate count and the batch bloom come
+      // out of ONE aggregation over the link cache (bloom_agg riding the
+      // count job) — separately they cost two full passes over the widest
+      // per-round stream.
+      gate = () => {
+        if (blooms.nonEmpty) {
+          val (c, bb) = Sieve.bloomAggParallel(links, "urlHash",
+            math.max(f.linksUpper, 1024L), Sieve.BatchBloomFpp, bloomMergeGroups)
+          dedupIn = c
+          input = Sieve.newUrlsScanProbe(links, st.seen, order, blooms, lc,
+            broadcastLimit = ProbeThreshold,
+            candidateCount = dedupIn, seenCount = st.maxSeq,
+            prebuiltBatchBloom = bb)
+        } else {
+          dedupIn = links.count()
+          input = Sieve.newUrls(links, st.seen, order).transform(lc)
+        }
+      },
+      dependents = Seq(
+        () => {
+          // 8x-oversplit buckets: parentSeq density is uneven (popular
+          // hosts sit at low seqs), so fine-grained monotone buckets keep
+          // the rank window's tasks balanced. First new seq is exactly
+          // maxSeq (dense continuation of enqueue order).
+          val (ranked, n) = Sieve.assignSeq(input, order, startSeq = st.maxSeq - 1L,
+            Sieve.linearBuckets(col("parentSeq"), f.loSeq, f.hiSeq,
+              math.max(8, cfg.statePartitions * 8)))
+          out = n
+          // (measured: repartitioning the delta by hostHash here costs more
+          // shuffle bytes than the heads aggregation's partial buffers save
+          // — the delta rows outnumber hosts; the frontier is re-clustered
+          // by hostHash only at compaction/snapshot)
+          newDelta = lc(budget(toFrontier(ranked.select("url", "urlHash", "seq")), st.hosts)
+            .select(st.frontier.columns.map(col): _*))
+        },
+        // seen append: ALL sieved urls (even budget-dropped ones are "seen"
+        // — the reference sieve recorded them before append()'s budget
+        // re-check)
+        () => input.select("urlHash")
+          .write.options(graft.util.FastLocalFs.writeOptions).mode(SaveMode.Overwrite).parquet(appendDir("seen", round)),
+        // per-round DELTA bloom (sized by dedupIn, an upper bound on the
+        // delta), extending an existing bank: a plain bloom_agg
+        // AGGREGATION job over the lc'd sieve output — partial filters
+        // merge executor-side and ONE merged filter reaches the driver.
+        // (An Observation on the seen write ships every task's full-size
+        // partial buffer to the driver, O(tasks x filterSize) — past
+        // maxResultSize at cluster partition counts.)
+        () => if (blooms.nonEmpty && dedupIn > 0)
+          extendBloom(Sieve.bloomAggParallel(input, "urlHash",
+            math.max(dedupIn, 1024L), BloomFpp, bloomMergeGroups)._2)))
+    Sieved(input, dedupIn, out, newDelta)
+  }
+
+  /** Per-host URL budget, enforced at sieve exit like Frontier.append
+    * (Frontier.java:810-814). */
+  private def budget(newFrontier: DataFrame, hosts: DataFrame): DataFrame =
+    if (cfg.maxUrlsPerHost == Long.MaxValue) newFrontier
+    else {
+      val withStored = newFrontier
+        .join(hosts.select("hostHash", "stored"), Seq("hostHash"), "left")
+        .na.fill(0L, Seq("stored"))
+      val k = math.min(cfg.maxUrlsPerHost, Int.MaxValue.toLong).toInt
+      Ranking.topKPerKey(withStored, "hostHash", Seq("seq"), k, rankCol = "__r")
+        .where(col("stored") + col("__r") <= cfg.maxUrlsPerHost)
+        .drop("__r", "stored")
+    }
+
+  /** Per-partition lineage + metrics (north_rule): per-partition rows carry
+    * only per-partition quantities; round-global quantities live on ONE
+    * partition_id=-1 row. */
+  private def roundMetrics(fetched: DataFrame, dedupIn: Long, dedupOut: Long,
+      duplicates: Long): DataFrame = {
+    val cols = Seq("partition_id", "fetched", "robots_fetched", "parsed", "failed",
+      "links_out", "bytes_fetched", "media_spans", "dedup_in", "dedup_out", "duplicates")
     val perPartition = fetched
       .withColumn("partition_id", spark_partition_id())
       .groupBy("partition_id")
@@ -1169,85 +1194,53 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
       .withColumn("dedup_out", lit(0L))
       .withColumn("duplicates", lit(0L))
     val globalRow = Seq((-1, 0L, 0L, 0L, 0L, 0L, 0L, 0L, dedupIn, dedupOut, duplicates))
-      .toDF("partition_id", "fetched", "robots_fetched", "parsed", "failed",
-        "links_out", "bytes_fetched", "media_spans", "dedup_in", "dedup_out", "duplicates")
-    val metricsOut = perPartition
-      .select("partition_id", "fetched", "robots_fetched", "parsed", "failed",
-        "links_out", "bytes_fetched", "media_spans", "dedup_in", "dedup_out", "duplicates")
-      .unionByName(globalRow) // round = partition dir
+      .toDF(cols: _*)
+    perPartition.select(cols.map(col): _*).unionByName(globalRow) // round = partition dir
+  }
 
-    // --- commit: snapshot on cadence, thread state in memory otherwise ---
-    // all state materializations + the metrics sink are independent
-    val snapDue = cfg.checkpointEvery <= 1 || round % cfg.checkpointEvery == 0
-    var hNextMem: DataFrame = null
-    var iNextMem: DataFrame = null
-    var digestsLc: DataFrame = null
-    var selHosts = 0L
-    inParallel(
-      () => metricsOut.write.options(graft.util.FastLocalFs.writeOptions).mode(SaveMode.Overwrite).parquet(appendDir("metrics", round)),
-      () => if (!snapDue) hNextMem = hostsNext.transform(lc),
-      () => if (!snapDue) iNextMem = ipsNext.transform(lc),
-      () => if (cfg.storeDocs) digestsLc = newDigests.transform(lc),
-      () => if (frontActive) selHosts = fetched.select("hostHash").distinct().count())
+  /** Snapshot cadence in rounds (1 = commit every round, the Iceberg
+    * per-round-commit analog). */
+  private def snapshotDue(round: Int): Boolean =
+    cfg.checkpointEvery <= 1 || round % cfg.checkpointEvery == 0
 
-    // adaptive front growth: a saturated round doubles the cap
-    val frontSizeNext =
-      if (!frontActive) st.frontSize
-      else if (selHosts >= st.frontSize) {
-        val grown = st.frontSize * cfg.frontGrowth
-        if (grown > 0) grown else Long.MaxValue
-      } else st.frontSize
-    val pendingRowsNext = st.pendingRows + dedupOut - (tombRowsNext - st.tombRows)
+  /** Fold one round's lc'd tombstone delta into the lazy union; once the
+    * chain has `tombstoneFoldParts` parts it is materialized into one
+    * block (plan-size hygiene: politeness-heavy crawls accumulate many
+    * small deltas between compactions). */
+  private def foldTombstones(tombs: Tombstones, delta: DataFrame, deltaRows: Long): Tombstones =
+    if (tombs.parts >= cfg.tombstoneFoldParts)
+      Tombstones(lc(tombs.set.unionByName(delta)), tombs.rows + deltaRows, 1)
+    else Tombstones(tombs.set.unionByName(delta), tombs.rows + deltaRows, tombs.parts + 1)
 
-    // compaction/snapshot is bloom-prefiltered + DISTRIBUTED exact
-    // anti-join (no driver-built broadcast: at compaction the tombstone
-    // set is millions of rows and the driver-side hash-relation build is
-    // a non-scaling cost; the per-round pending view keeps the broadcast
-    // because between compactions the set stays small). Lazy: the bloom
-    // build is a job, paid only on the rounds that actually compact.
-    lazy val compactedNext = compactFrontier(frontierNext, tombstonesNext, tombRowsNext)
-    val snapped = maybeSnapshot(round, compactedNext, hostsNext, ipsNext,
-      maxSeq + sieveOut, frontSizeNext, force = false)
-    val (fNext, tombNext, tombRowsFinal, tombPartsFinal) =
-      if (snapped)
-        (spark.read.parquet(stateDir(round, "frontier")), emptyTombstones, 0L, 0)
-      else if (tombRowsNext >= cfg.tombstoneCompactRows)
+  /** The one commit path of every executed round. `next.frontier` is the
+    * append-only table and `next.tombs` its pending deletions. On the
+    * snapshot cadence (`snap`) the compacted state tables are written and
+    * read back; otherwise the state stays in memory (`next.hosts` and
+    * `next.ips` are then already materialized) and the frontier is
+    * compacted once `tombstoneCompactRows` tombstones accumulate
+    * (WorkbenchVirtualizer.java:132-143 GC analog). */
+  private def commit(next: LiveState, snap: Boolean): Unit = {
+    // lazy: the compacted view costs a bloom-build job (see
+    // compactFrontier), paid only on the rounds that snapshot or compact
+    lazy val compacted = compactFrontier(next.frontier, next.tombs)
+    live = Some(
+      if (snap) {
+        writeState(next.round, compacted, next.hosts, next.ips, next.maxSeq, next.frontSize)
+        next.copy(frontier = spark.read.parquet(stateDir(next.round, "frontier")),
+          hosts = spark.read.parquet(stateDir(next.round, "hosts")),
+          ips = spark.read.parquet(stateDir(next.round, "ips")),
+          tombs = noTombstones)
+      } else if (next.tombs.rows >= cfg.tombstoneCompactRows)
         // amortized GC; re-spread by hostHash: the SMJ output would
         // otherwise collapse to shuffle.partitions partitions whose
         // per-partition distinct-host counts push the heads aggregation
         // into its sort-based fallback (and hostHash layout lets the next
         // heads groupBy skip its exchange entirely)
-        (compactedNext.repartition(cfg.statePartitions * 4, col("hostHash"))
-          .transform(lc), emptyTombstones, 0L, 0)
-      else (frontierNext, tombstonesNext, tombRowsNext, tombPartsNext)
-    val (hNext, iNext) =
-      if (snapped)
-        (spark.read.parquet(stateDir(round, "hosts")),
-          spark.read.parquet(stateDir(round, "ips")))
-      else (hNextMem, iNextMem)
-    val seenNext = seen.unionByName(sievedInput.select("urlHash"))
-    val digestsNext =
-      if (cfg.storeDocs) st.digests.unionByName(digestsLc)
-      else st.digests
-    live = Some(LiveState(round, maxSeq + sieveOut, frontSizeNext, fNext, hNext, iNext,
-      seenNext, digestsNext, tombNext, pendingRowsNext, tombRowsFinal,
-      tombParts = tombPartsFinal))
-
-    fetched0.unpersist(); selected.unpersist()
-    parsedLinks.unpersist(); hostsU.unpersist()
-    if (cfg.storeDocs) docs.unpersist()
-    fetchedCount
-  }
-
-  /** Snapshot the state tables when the cadence (or `force`) says so.
-    * `frontier` is by-name: the compacted view costs a bloom-build job
-    * (see [[compactFrontier]]) that must not run on the rounds that skip
-    * the snapshot. */
-  private def maybeSnapshot(round: Int, frontier: => DataFrame, hosts: DataFrame,
-      ips: DataFrame, maxSeq: Long, frontSize: Long, force: Boolean): Boolean = {
-    val due = force || cfg.checkpointEvery <= 1 || round % cfg.checkpointEvery == 0
-    if (due) writeState(round, frontier, hosts, ips, maxSeq, frontSize)
-    due
+        next.copy(
+          frontier = compacted.repartition(cfg.statePartitions * 4, col("hostHash")).transform(lc),
+          tombs = noTombstones)
+      else next)
+    bloomRound = next.round
   }
 
   /** frontier ∖ tombstones for compaction/snapshot. A plain sort-merge
@@ -1264,19 +1257,18 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
     * The broadcast filter (~1.2 MB/M tombstones at 1% fpp) is dropped
     * with the session; compaction fires once per `tombstoneCompactRows`
     * (and once at the final snapshot), so handles don't accumulate. */
-  private def compactFrontier(frontier: DataFrame, tombstones: DataFrame,
-      tombRows: Long): DataFrame = {
-    if (tombRows <= 0) frontier
+  private def compactFrontier(frontier: DataFrame, tombs: Tombstones): DataFrame = {
+    if (tombs.rows <= 0) frontier
     else {
-      val (_, bf) = Sieve.bloomAggParallel(tombstones, "urlHash",
-        math.max(tombRows, 1024L), CompactBloomFpp, bloomMergeGroups)
+      val (_, bf) = Sieve.bloomAggParallel(tombs.set, "urlHash",
+        math.max(tombs.rows, 1024L), CompactBloomFpp, bloomMergeGroups)
       if (bf == null) frontier
       else {
         val hit = might_contain_bank(col("urlHash"),
           Seq(spark.sparkContext.broadcast(bf)))
         frontier.where(!hit).unionByName(
           frontier.where(hit)
-            .join(tombstones.hint("shuffle_merge"), Seq("urlHash"), "left_anti"))
+            .join(tombs.set.hint("shuffle_merge"), Seq("urlHash"), "left_anti"))
       }
     }
   }
@@ -1289,14 +1281,11 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
   /** Force a snapshot of the current live state (used at end of run). */
   private def snapshotLive(): Unit = live.foreach { st =>
     if (!exists(stateDir(st.round, "scalars") + "/_SUCCESS")) {
-      writeState(st.round, compactFrontier(st.frontier, st.tombstones, st.tombRows),
+      writeState(st.round, compactFrontier(st.frontier, st.tombs),
         st.hosts, st.ips, st.maxSeq, st.frontSize)
     }
   }
 
-  /** Run (or resume) the crawl up to cfg.maxRounds; returns rounds executed.
-    * A round with zero fetches is a politeness wait, not necessarily the
-    * end: the crawl is drained only when the frontier itself is empty. */
   /** (round, fetched, wall-sec) per executed round — bench/probe telemetry
     * for the fixed-cost-vs-round-size analysis. */
   val roundWalls = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Double)]
@@ -1313,6 +1302,9 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
   var initWall = 0.0
   var snapshotWall = 0.0
 
+  /** Run (or resume) the crawl up to cfg.maxRounds; returns rounds executed.
+    * A round with zero fetches is a politeness wait, not necessarily the
+    * end: the crawl is drained only when the frontier itself is empty. */
   def run(): Int = withRaisedBloomCaps {
     var round = lastCompleteRound()
     if (round < 0) {
@@ -1330,8 +1322,6 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
       val wall = (System.nanoTime() - t0) / 1e9
       roundWalls += ((round, n, wall))
       roundRunMs += roundCounter() - c0
-      if (cfg.logRounds)
-        println(f"[crawler] round=$round fetched=$n wall=$wall%.1fs")
       executed += 1
       if (n == 0)
         drained = live.forall(_.pendingRows <= 0)

@@ -17,9 +17,11 @@ import org.apache.spark.util.sketch.BloomFilter
   *     positions back to input order).
   *
   * Two implementations of the membership check:
-  *  - [[newUrls]] — the direct shape: anti-join against the seen store
-  *    (optionally bloom-bank-prefiltered), the Spark reading of the
-  *    reference's batched sort-merge against its sorted hash file;
+  *  - [[newUrls]] — the direct shape: a plain anti-join against the seen
+  *    store, the Spark reading of the reference's batched sort-merge
+  *    against its sorted hash file. The round path uses it while the
+  *    crawl is below `CrawlConfig.bloomMinSeen`, where building and
+  *    broadcasting filters costs more than the join;
   *  - [[newUrlsScanProbe]] — THE round/scale path: the seen store is only
   *    ever SCANNED, never shuffled/sorted/broadcast — a bloom built over
   *    the batch reverses the probe, and the (small) `present` set carries
@@ -31,9 +33,9 @@ import org.apache.spark.util.sketch.BloomFilter
   *
   * The bloom bank (consolidated base + per-round deltas, each broadcast
   * once at build) is the north_rule's "broadcast-refreshed bloom/cuckoo
-  * URL-seen set": it culls the definitely-new majority before any join,
-  * and gates the oversized-present fallback; membership stays EXACT via
-  * the anti-join of the remainder.
+  * URL-seen set": in [[newUrlsScanProbe]] it splits an oversized batch
+  * into sure-new and maybe-seen legs so only the latter pays the shuffle
+  * join; membership stays EXACT via the anti-join against `present`.
   */
 object Sieve {
 
@@ -49,55 +51,14 @@ object Sieve {
     * @param candidates must have `urlHash` plus the order columns
     * @param seen       table with column `urlHash` (may be empty)
     * @param orderCols  lexicographic first-enqueue order of the batch
-    * @param bloom      optional broadcast-ready bloom over seen hashes
     * @return candidate rows that are genuinely new, one per urlHash
     */
-  def newUrls(
-      candidates: DataFrame,
-      seen: DataFrame,
-      orderCols: Seq[String],
-      blooms: Seq[BloomFilter] = Nil,
-      broadcastProbe: Boolean = false): DataFrame = {
-    val spark = candidates.sparkSession
-
+  def newUrls(candidates: DataFrame, seen: DataFrame, orderCols: Seq[String]): DataFrame =
     // First-wins within the batch (MercatorSieve.java:311-318), via partial
     // aggregation rather than a window: map-side combine makes a heavily
     // duplicated URL (skewed key) cost one row per partition, not a sort.
-    val deduped = Ranking.firstPerKey(candidates, "urlHash", orderCols)
-
-    blooms match {
-      case Nil =>
-        deduped.join(seen, Seq("urlHash"), "left_anti")
-      case bank =>
-        // bank of filters: the consolidated base + per-round deltas (the
-        // broadcast-REFRESHED filter is extended, not rebuilt, each round)
-        val bcast = bank.map(spark.sparkContext.broadcast(_))
-        // Definitely-new rows skip the join entirely; only bloom-positive
-        // rows (true hits + false positives) pay the exact membership check.
-        // might_contain_bank is a codegen'd expression: the prefilter stays
-        // inside whole-stage codegen (a Scala UDF here crossed the
-        // codegen->Scala boundary once per candidate URL).
-        val flagged = deduped.withColumn("__maybe",
-          graft.functions.might_contain_bank(col("urlHash"), bcast))
-        val sure = flagged.where(!col("__maybe")).drop("__maybe")
-        val maybe = flagged.where(col("__maybe")).drop("__maybe")
-        val maybeNew =
-          if (broadcastProbe) {
-            // Small batch: probe the seen table with a broadcast hash set —
-            // ONE sequential scan of `seen`, no shuffle/sort of it (the
-            // Spark analog of Mercator's sequential store merge,
-            // MercatorSieve.java:311-344). `present` <= batch size, so the
-            // second join broadcasts too.
-            val present = seen
-              .join(broadcast(maybe.select("urlHash")), Seq("urlHash"), "left_semi")
-            maybe.join(broadcast(present), Seq("urlHash"), "left_anti")
-          } else {
-            // Large batch: sort-merge anti-join (shuffles both sides).
-            maybe.join(seen, Seq("urlHash"), "left_anti")
-          }
-        sure.unionByName(maybeNew)
-    }
-  }
+    Ranking.firstPerKey(candidates, "urlHash", orderCols)
+      .join(seen, Seq("urlHash"), "left_anti")
 
   /** Round-path sieve that never shuffles the seen store (the 10^10-seen
     * scale path). Shape:
@@ -192,11 +153,6 @@ object Sieve {
       sure.unionByName(mat(maybe.join(present, Seq("urlHash"), "left_anti")))
     }
   }
-
-  /** Build a bloom filter over the seen table's hashes (one pass; driver
-    * holds only the bitset, sized for `expected` items at `fpp`). */
-  def seenBloom(seen: DataFrame, expected: Long, fpp: Double = 0.01): BloomFilter =
-    seen.stat.bloomFilter("urlHash", math.max(expected, 1L), fpp)
 
   /** Row count + bloom filter over `hashCol` in ONE pass, with a PARALLEL
     * final merge. A plain global `agg(bloom_agg)` funnels every map task's

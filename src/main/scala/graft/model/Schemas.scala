@@ -11,25 +11,6 @@ package graft.model
   * span-sequence invariant (kind, text, media_ref, order) keys off it. */
 case class Span(kind: String, text: String, media_ref: String, offset: Int)
 
-/** A row of the interleaved-documents input/output table. */
-case class Doc(doc_id: String, spans: Seq[Span])
-
-/** A frontier entry: a normalized URL waiting to be fetched.
-  * `seq` is the global first-enqueue order (the sieve's output order,
-  * reference `MercatorSieve.java:349-363`). The row is deliberately
-  * NARROW — url + three hashes + seq; schemeAuthority/pathQuery/host are
-  * re-derived from `url` only for the (politeness-bounded) selected
-  * burst, so per-round frontier scans move the minimum bytes (the
-  * reference's prefix-omission byte-array layout, `Frontier.java:118-124`,
-  * compresses for the same reason). `hostHash` = murmur64(schemeAuthority)
-  * — the visit-state key AND the partitioning key. */
-case class FrontierUrl(
-    url: String,
-    urlHash: Long,
-    hostHash: Long,
-    ipHash: Long,
-    seq: Long)
-
 /** Per-host scheduler state (reference `VisitState.java:79-138`).
   * `nextFetch` is in virtual rounds (wall-clock politeness delays become
   * round-stamped virtual time, SURVEY.md §7.4). */
@@ -53,9 +34,6 @@ case class HostState(
 
 /** Per-IP politeness state (reference `WorkbenchEntry.java:52-80`). */
 case class IpState(ipHash: Long, nextFetch: Long)
-
-/** Robots filter per host (broadcast state table, north_rule). */
-case class RobotsEntry(schemeAuthority: String, prefixes: Seq[String])
 
 /** Result of one (synthetic) fetch+parse (reference `FetchData.java:60-74`
   * + `ParsingThread` outputs). `links` is the parser's ordered-deduplicated
@@ -92,19 +70,6 @@ case class FetchResult(
       * guessedCharset, HTMLParser.java:467,691-717 — the WARC
       * BUBING_GUESSED_CHARSET header analog); null for non-HTML results */
     guessedCharset: String = null)
-
-/** One stored document (the WARC-store analog, `store/WarcStore.java:41`). */
-case class StoredDoc(
-    doc_id: String,
-    schemeAuthority: String,
-    spans: Seq[Span],
-    digest: String,
-    status: Int,
-    is_duplicate: Boolean,
-    truncated: Boolean,
-    n_links: Int,
-    guessed_charset: String,
-    round: Int)
 
 /** Per-round, per-partition lineage + fetch/parse metrics (north_rule). */
 case class RoundMetrics(

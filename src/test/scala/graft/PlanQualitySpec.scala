@@ -125,9 +125,12 @@ class PlanQualitySpec extends AnyFunSuite {
     val batch = (1L to 2000L).map(i => (s"u$i", i, 0L, i))
       .toDF("url", "urlHash", "parentSeq", "linkIdx").localCheckpoint(true)
     val seen = (1L to 900L).toDF("urlHash").localCheckpoint(true)
-    val bloom = graft.frontier.Sieve.seenBloom(seen, 1000)
-    val out = graft.frontier.Sieve.newUrls(batch, seen, Seq("parentSeq", "linkIdx"),
-      blooms = Seq(bloom))
+    val bloom = seen.stat.bloomFilter("urlHash", 1000, 0.01)
+    // the scan-probe's bank-split fallback (present set over the broadcast
+    // limit); identity `mat` keeps the bank prefilter in the final plan
+    val out = graft.frontier.Sieve.newUrlsScanProbe(batch, seen, Seq("parentSeq", "linkIdx"),
+      Seq(spark.sparkContext.broadcast(bloom)), mat = identity, broadcastLimit = 10L,
+      candidateCount = 2000L)
     val plan = finalPlan(out)
     assert(!plan.contains("UDF"), s"sieve prefilter fell back to a Scala UDF:\n$plan")
     assert(plan.contains("might_contain_bank"), s"expected the bank expression:\n$plan")
@@ -154,7 +157,7 @@ class PlanQualitySpec extends AnyFunSuite {
     val batch = (99001L to 102000L).map(i => (s"u$i", i, 0L, i))
       .toDF("url", "urlHash", "parentSeq", "linkIdx").localCheckpoint(true)
     val seen = (1L to 100000L).toDF("urlHash").localCheckpoint(true)
-    val bloom = graft.frontier.Sieve.seenBloom(seen, 100000)
+    val bloom = seen.stat.bloomFilter("urlHash", 100000, 0.01)
     spark.sparkContext.addSparkListener(listener)
     try {
       val out = graft.frontier.Sieve.newUrlsScanProbe(batch, seen,

@@ -55,10 +55,11 @@ class CrawlerSpec extends AnyFunSuite {
     val d2 = tempDir("bloomOff")
     // bloomMinSeen=1 forces the bank + fused batch-bloom/delta-bloom path
     // even at spec scale (the default 50k gate would skip blooms entirely
-    // on a tiny crawl and the test would compare identical code paths)
+    // on a tiny crawl and the test would compare identical code paths);
+    // Long.MaxValue keeps the bank off for the whole crawl
     val c1 = new Crawler(spark, d1,
-      cfg.copy(useBloom = true, bloomMinSeen = 1L, bloomExpected = 4096L, maxRounds = 4))
-    val c2 = new Crawler(spark, d2, cfg.copy(useBloom = false, maxRounds = 4))
+      cfg.copy(bloomMinSeen = 1L, bloomExpected = 4096L, maxRounds = 4))
+    val c2 = new Crawler(spark, d2, cfg.copy(bloomMinSeen = Long.MaxValue, maxRounds = 4))
     c1.run(); c2.run()
     assert(collectTrace(c1) == collectTrace(c2))
   }
@@ -71,7 +72,7 @@ class CrawlerSpec extends AnyFunSuite {
     // dropped broadcasts unpersisted) every 2 deltas — all performance-
     // shape knobs, so the crawl must be byte-identical to the default
     val c1 = new Crawler(spark, d1, cfg.copy(
-      useBloom = true, bloomMinSeen = 1L, bloomExpected = 4096L, bloomMaxDeltas = 2,
+      bloomMinSeen = 1L, bloomExpected = 4096L, bloomMaxDeltas = 2,
       tombstoneCompactRows = 50L, tombstoneFoldParts = 2,
       checkpointEvery = 99, maxRounds = 5))
     val c2 = new Crawler(spark, d2, cfg.copy(maxRounds = 5))
@@ -329,6 +330,15 @@ class CrawlerSpec extends AnyFunSuite {
     // repeating identical empty rounds until maxRounds
     assert(rounds < 10, s"crawl did not drain: ran $rounds rounds")
     assertOracleParity(crawler, f, OracleCrawler.Gates(fetchOk = _ => false))
+    // the same crawl committed in memory: zero-fetch drop rounds take the
+    // keep-in-memory and compaction branches instead of a snapshot
+    val fMem = f.copy(checkpointEvery = 99, tombstoneCompactRows = 4)
+    val mem = new Crawler(spark, tempDir("alldrop-mem"), fMem)
+    assert(mem.run() == rounds)
+    assert(collectTrace(mem) == t)
+    def pending(c: Crawler) = c.frontierState().select("urlHash").collect().map(_.getLong(0)).toSet
+    assert(pending(mem) == pending(crawler), "final frontier differs from the per-round-snapshot crawl")
+    assertOracleParity(mem, fMem, OracleCrawler.Gates(fetchOk = _ => false))
   }
 
   test("gates + exceptions + budget: spark == oracle") {

@@ -61,11 +61,11 @@ object OracleCrawler {
     val trace = mutable.ArrayBuffer[TraceRow]()
     var maxSeq = 0L
     var frontSize = cfg.initialFrontSize
-    val kHeads = math.max(1, cfg.burst + cfg.headSlack)
+    val kHeads = math.max(1, cfg.burst + Crawler.HeadSlack)
     val blacklist = cfg.blacklistHosts.toSet
     val blacklistIps = cfg.blacklistIps.toSet
 
-    def rule(cls: String): ExcRule = cfg.exceptionRules.getOrElse(cls, cfg.exceptionDefault)
+    def rule(cls: String): ExcRule = Crawler.ExceptionRules.getOrElse(cls, Crawler.ExceptionDefault)
 
     /** Sieve + budget + frontier insert (first-enqueue order). */
     def enqueue(candidates: Seq[(Long, Long, String)],

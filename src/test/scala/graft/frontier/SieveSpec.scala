@@ -65,13 +65,22 @@ class SieveSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(11)
     val mixed = Vector.fill(400)(if (rnd.nextBoolean()) "s" + rnd.nextInt(300) else "n" + rnd.nextInt(150))
     val b = batch(mixed, 0)
-    val bloom = Sieve.seenBloom(seen, expected = 200)
-    val exact = Sieve.newUrls(b, seen, Seq("parentSeq", "linkIdx"), Nil)
-      .orderBy("linkIdx").select("url").as[String].collect().toSeq
-    val bloomed = Sieve.newUrls(b, seen, Seq("parentSeq", "linkIdx"), Seq(bloom))
-      .orderBy("linkIdx").select("url").as[String].collect().toSeq
-    assert(exact == bloomed)
-    assert(exact.forall(!_.startsWith("s") || !seenUrls.contains(exact)))
+    val order = Seq("parentSeq", "linkIdx")
+    def urls(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("linkIdx").select("url").as[String].collect().toSeq
+    val exact = urls(Sieve.newUrls(b, seen, order))
+    assert(exact.nonEmpty && exact.forall(u => !seenUrls.contains(u)))
+    // the scan-probe round path, through each of its three shapes: the
+    // |present| bound shortcut (seen count known), the broadcast-present
+    // path (count unknown), and the bank-split fallback (present set over
+    // the broadcast limit)
+    val bank = Seq(spark.sparkContext.broadcast(seen.stat.bloomFilter("urlHash", 200, 0.01)))
+    def probe(limit: Long, seenCount: Long) = urls(Sieve.newUrlsScanProbe(b, seen, order,
+      bank, mat = _.localCheckpoint(true), broadcastLimit = limit,
+      candidateCount = mixed.size.toLong, seenCount = seenCount))
+    assert(probe(1L << 20, seenUrls.size.toLong) == exact, "bound shortcut")
+    assert(probe(1L << 20, -1L) == exact, "broadcast-present path")
+    assert(probe(10L, -1L) == exact, "bank-split fallback")
   }
 
   test("bloom_agg builds a filter with stat.bloomFilter membership semantics") {
