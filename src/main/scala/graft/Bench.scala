@@ -56,7 +56,6 @@ object Bench {
     maxRounds = 4,
     robotsEnabled = false,
     storeDocs = false,
-    bloomExpected = 64L << 20,
     checkpointEvery = 99, // snapshot only at end: in-memory state threading
     statePartitions = threads,
     stateStorage = "DISK_ONLY") // tmpfs-backed blocks: off the JVM heap

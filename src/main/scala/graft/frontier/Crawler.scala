@@ -1,7 +1,6 @@
 package graft.frontier
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.{Burl, FilterDsl, Robots}
@@ -71,13 +70,14 @@ case class CrawlConfig(
       * link gate (frontier-only benchmark; the north metric is URLs
       * scheduled+deduped/sec — the store is the WARC-sink side) */
     storeDocs: Boolean = true,
-    /** consolidate the per-round delta blooms into one full filter built
-      * distributed from the seen table once this many deltas accumulate */
-    bloomMaxDeltas: Int = 12,
-    bloomExpected: Long = 4L << 20,
-    /** below this seen-size the bloom prefilter is skipped (anti-join alone
-      * is cheaper than building + broadcasting the filter); Long.MaxValue
-      * turns the bloom bank off */
+    /** below this seen size the round sieve uses the plain anti-join
+      * (`Sieve.newUrls`); at or above it, the scan-probe
+      * (`Sieve.newUrlsScanProbe`). Both are exact. Kept as a crossover
+      * because forcing the scan-probe on every round measured slower on
+      * crawls whose seen set stays below it (seen sizes 400 to ~45k; the
+      * side above 50k has no measurement, and the value was not
+      * re-measured when the seen-bloom bank was deleted); Long.MaxValue
+      * keeps the plain anti-join throughout */
     bloomMinSeen: Long = 50000L,
     ipSpace: Long = 1L << 20,
     /** multi-agent IP-delay attenuation (StartupConfiguration.java:213-226,
@@ -128,8 +128,8 @@ case class FetchUnit(
   *              adaptive front cap)
   *   fetched  = selected heads -> render+parse HTML (typed Dataset map:
   *              HtmlParser links/spans/digest), exception state machine
-  *   newUrls  = links |> scheduleFilter |> sieve (bloom + anti-join,
-  *              first-enqueue order) |> budget
+  *   newUrls  = links |> scheduleFilter |> sieve (exact anti-join or
+  *              scan-probe, first-enqueue order) |> budget
   *   state'   = append frontier delta; tombstone consumed rows; update
   *              hosts/ips via broadcast of the per-round host aggregate
   * }}}
@@ -225,8 +225,8 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
   try spark.conf.set("spark.sql.codegen.cache.maxEntries", "10000")
   catch { case _: org.apache.spark.sql.AnalysisException => () } // static conf set too late: harness sets it at session build
   // bloom_agg (the fused filter builds) is clamped by the runtime-filter
-  // size caps (default 4M items / 67M bits — far below a crawl's
-  // per-round deltas); raise them so the fused filters keep their sized
+  // size caps (default 4M items / 67M bits — far below a large round's
+  // link batch); raise them so the fused filters keep their sized
   // fpp instead of silently degrading. The caps also govern Spark's own
   // InjectRuntimeFilter for every query on the session, so the raise is
   // SCOPED to run() (set before the first round, restored after the last)
@@ -267,7 +267,7 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
     * `independent` actions run concurrently; the moment `gate` completes,
     * start `dependents` (which consume the gate's output) WITHOUT waiting
     * for the independent branches. The r4 two-phase barrier made the
-    * rank/seen/bloom branches (which need only the sieve output) wait for
+    * rank/seen branches (which need only the sieve output) wait for
     * the docs sink, host-state, and tombstone branches as well — every
     * phase tail ran one branch alone while the rest of the executor sat
     * idle; this removes the barrier that caused it. Output data is
@@ -308,9 +308,6 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
   /** candidate batches at or below this size probe the seen table via a
     * broadcast hash set (scan, no shuffle); above it, sort-merge anti-join */
   private val ProbeThreshold = 2L << 20
-
-  /** fpp of the seen-set bloom bank (consolidated and per-round deltas) */
-  private val BloomFpp = 0.03
 
   private val gatesTrivial =
     cfg.parseFilter == "true" && cfg.followFilter == "true" && cfg.storeFilter == "true"
@@ -446,63 +443,6 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
       spark.read.parquet(stateDir(round, "ips")),
       readSeen(round), readDigests(round),
       noTombstones, pendingRows = frontier.count())
-  }
-
-  // ---------------- bloom bank (broadcast-refreshed URL-seen filter) ----------------
-
-  /** Per-round delta blooms, each built DISTRIBUTED over that round's
-    * (small) new-hash delta; consolidated into one full-capacity filter
-    * (again distributed, from the seen table) every `bloomMaxDeltas`
-    * rounds. No driver-side row collection anywhere (north_rule
-    * "broadcast-refreshed bloom URL-seen set"). Each filter is BROADCAST
-    * ONCE when built and the broadcast handles are reused across rounds —
-    * re-broadcasting the whole bank (tens of MB) every round was a
-    * measurable per-round driver serialization + executor re-fetch cost.
-    * Dropped handles are unpersisted eagerly (executor copies of the
-    * tens-of-MB consolidated filter would otherwise linger until
-    * driver-side GC let the ContextCleaner reclaim them). */
-  private var bloomBank: Vector[org.apache.spark.broadcast.Broadcast[org.apache.spark.util.sketch.BloomFilter]] = Vector.empty
-  private var bloomRound: Int = -1
-
-  /** Drop the current bank, releasing executor copies now (non-blocking). */
-  private def clearBloomBank(): Unit = {
-    bloomBank.foreach(_.unpersist(blocking = false))
-    bloomBank = Vector.empty
-  }
-
-  private def bloomFilters(state: LiveState)
-      : Seq[org.apache.spark.broadcast.Broadcast[org.apache.spark.util.sketch.BloomFilter]] = {
-    if (state.maxSeq < cfg.bloomMinSeen) return Nil
-    if (bloomRound != state.round || bloomBank.isEmpty) {
-      // cold start / resume: one consolidated filter from the seen table,
-      // sized by the ACTUAL seen row count (maxSeq counts every sieved
-      // row), capped at cfg.bloomExpected. Sizing by the configured
-      // whole-crawl capacity built a ~58 MB filter when seen held ~1-2 M
-      // hashes: full-capacity per-partition partials merged at build time
-      // (partitions × 58 MB of allocation + OR traffic), a 58 MB
-      // broadcast, and — the real cost — every candidate URL of the
-      // widest per-round stream probing a DRAM-resident bitset instead of
-      // a cache-resident one (the LLC-capacity contention term of the
-      // BASELINE floor model). Exactness is unchanged either way: the
-      // bloom only prefilters the exact anti-join, so a smaller filter
-      // admits a few % more rows to the exact path and zero result change.
-      // The periodic consolidation (extendBloom) re-sizes the same way as
-      // the crawl grows.
-      clearBloomBank()
-      val expected = math.max(1024L, math.min(state.maxSeq, cfg.bloomExpected))
-      bloomBank = Vector(spark.sparkContext.broadcast(
-        state.seen.stat.bloomFilter("urlHash", expected, BloomFpp)))
-      bloomRound = state.round
-    }
-    bloomBank
-  }
-
-  /** Add this round's delta bloom (null = empty delta) to the bank and
-    * consolidate when the bank is long. [[commit]] stamps the bank with
-    * the round. */
-  private def extendBloom(delta: org.apache.spark.util.sketch.BloomFilter): Unit = {
-    if (delta != null) bloomBank :+= spark.sparkContext.broadcast(delta)
-    if (bloomBank.size > cfg.bloomMaxDeltas) clearBloomBank() // rebuild next round
   }
 
   private def maxRoundIn(dir: String, complete: String => Boolean): Int = {
@@ -1084,32 +1024,30 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
 
   /** The overlapped round tail, DEPENDENCY-driven (no phase barrier): the
     * caller's `independent` sinks and state folds run alongside the SIEVE
-    * (the gate), and the rank chain, seen append, and delta bloom — which
-    * need ONLY the materialized sieve output — launch the moment it
-    * completes. A barrier here made every phase tail run its longest
-    * branch alone while the rest of the executor idled (occupancy 0.64 at
-    * 16t vs 0.84 at 4t). */
+    * (the gate), and the rank chain and seen append — which need ONLY the
+    * materialized sieve output — launch the moment it completes. A barrier
+    * here made every phase tail run its longest branch alone while the
+    * rest of the executor idled (occupancy 0.64 at 16t vs 0.84 at 4t). */
   private def sieve(st: LiveState, round: Int, links: DataFrame, f: Fetched,
       independent: Seq[() => Unit]): Sieved = {
     val order = Seq("parentSeq", "linkIdx")
-    val blooms = bloomFilters(st)
     var dedupIn = 0L
     var input: DataFrame = null
     var out = 0L
     var newDelta: DataFrame = null
     inParallelStaged(independent,
-      // the seen store is only ever SCANNED, never shuffled/sorted/
-      // broadcast (scan-probe; an SMJ re-shuffles all accumulated seen
-      // hashes every round). The candidate count and the batch bloom come
-      // out of ONE aggregation over the link cache (bloom_agg riding the
-      // count job) — separately they cost two full passes over the widest
-      // per-round stream.
+      // from bloomMinSeen on, the seen store is only ever SCANNED, never
+      // shuffled/sorted/broadcast (scan-probe; an SMJ re-shuffles all
+      // accumulated seen hashes every round). The candidate count and the
+      // batch bloom come out of ONE aggregation over the link cache
+      // (bloom_agg riding the count job) — separately they cost two full
+      // passes over the widest per-round stream.
       gate = () => {
-        if (blooms.nonEmpty) {
+        if (st.maxSeq >= cfg.bloomMinSeen) {
           val (c, bb) = Sieve.bloomAggParallel(links, "urlHash",
             math.max(f.linksUpper, 1024L), Sieve.BatchBloomFpp, bloomMergeGroups)
           dedupIn = c
-          input = Sieve.newUrlsScanProbe(links, st.seen, order, blooms, lc,
+          input = Sieve.newUrlsScanProbe(links, st.seen, order, lc,
             broadcastLimit = ProbeThreshold,
             candidateCount = dedupIn, seenCount = st.maxSeq,
             prebuiltBatchBloom = bb)
@@ -1139,17 +1077,7 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
         // — the reference sieve recorded them before append()'s budget
         // re-check)
         () => input.select("urlHash")
-          .write.options(graft.util.FastLocalFs.writeOptions).mode(SaveMode.Overwrite).parquet(appendDir("seen", round)),
-        // per-round DELTA bloom (sized by dedupIn, an upper bound on the
-        // delta), extending an existing bank: a plain bloom_agg
-        // AGGREGATION job over the lc'd sieve output — partial filters
-        // merge executor-side and ONE merged filter reaches the driver.
-        // (An Observation on the seen write ships every task's full-size
-        // partial buffer to the driver, O(tasks x filterSize) — past
-        // maxResultSize at cluster partition counts.)
-        () => if (blooms.nonEmpty && dedupIn > 0)
-          extendBloom(Sieve.bloomAggParallel(input, "urlHash",
-            math.max(dedupIn, 1024L), BloomFpp, bloomMergeGroups)._2)))
+          .write.options(graft.util.FastLocalFs.writeOptions).mode(SaveMode.Overwrite).parquet(appendDir("seen", round))))
     Sieved(input, dedupIn, out, newDelta)
   }
 
@@ -1240,7 +1168,6 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
           frontier = compacted.repartition(cfg.statePartitions * 4, col("hostHash")).transform(lc),
           tombs = noTombstones)
       else next)
-    bloomRound = next.round
   }
 
   /** frontier ∖ tombstones for compaction/snapshot. A plain sort-merge

@@ -16,13 +16,12 @@ import org.apache.spark.util.sketch.BloomFilter
   *   - survivors exit in FIRST-ENQUEUE ORDER (:349-363 re-sorts surviving
   *     positions back to input order).
   *
-  * Two implementations of the membership check:
+  * Two implementations of the membership check, exact and equivalent:
   *  - [[newUrls]] — the direct shape: a plain anti-join against the seen
   *    store, the Spark reading of the reference's batched sort-merge
   *    against its sorted hash file. The round path uses it while the
-  *    crawl is below `CrawlConfig.bloomMinSeen`, where building and
-  *    broadcasting filters costs more than the join;
-  *  - [[newUrlsScanProbe]] — THE round/scale path: the seen store is only
+  *    crawl is below `CrawlConfig.bloomMinSeen`;
+  *  - [[newUrlsScanProbe]] — the scale path: the seen store is only
   *    ever SCANNED, never shuffled/sorted/broadcast — a bloom built over
   *    the batch reverses the probe, and the (small) `present` set carries
   *    the exact anti-join. Mercator's sequential store merge
@@ -31,11 +30,8 @@ import org.apache.spark.util.sketch.BloomFilter
   *    plain SMJ anti-join would re-SHUFFLE the full accumulated store
   *    every round.
   *
-  * The bloom bank (consolidated base + per-round deltas, each broadcast
-  * once at build) is the north_rule's "broadcast-refreshed bloom/cuckoo
-  * URL-seen set": in [[newUrlsScanProbe]] it splits an oversized batch
-  * into sure-new and maybe-seen legs so only the latter pays the shuffle
-  * join; membership stays EXACT via the anti-join against `present`.
+  * The scan-probe's batch bloom is sized for its batch and released
+  * when the call returns; nothing carries over to the next round.
   */
 object Sieve {
 
@@ -65,26 +61,27 @@ object Sieve {
     *
     *  1. within-batch first-wins dedup (one batch-sized shuffle — the only
     *     large exchange);
-    *  2. bank-bloom prefilter splits sure-new from maybe-seen (codegen'd);
-    *  3. a SECOND bloom, built distributed over the maybe-batch, REVERSES
-    *     the probe: `present = seen WHERE batchBloom.mightContain(hash)` is
-    *     a pure SCAN of the seen store — seen is never shuffled, sorted, or
+    *  2. a bloom built distributed over the batch REVERSES the probe:
+    *     `present = seen WHERE batchBloom.mightContain(hash)` is a pure
+    *     SCAN of the seen store — seen is never shuffled, sorted, or
     *     broadcast, at any batch size;
-    *  4. exact anti-join of maybe against the (small) present set —
-    *     broadcast when it fits, shuffle of two SMALL sides otherwise.
+    *  3. exact anti-join of the batch against the (small) present set —
+    *     broadcast when it fits, otherwise a shuffle join in which the
+    *     batch keeps the urlHash partitioning of its dedup and only
+    *     `present` moves.
     *
     * This is the Spark reading of Mercator's sequential store merge
     * (`MercatorSieve.java:311-344`): one sequential pass over the store per
-    * flush, work ∝ batch. Returns the new-URL batch as a union of two
-    * frames MATERIALIZED via `mat` (callers pass localCheckpoint), so the
-    * output is safe for the order-sensitive rank pass and is scanned — not
-    * recomputed — by its several consumers.
+    * flush, work ∝ batch. Returns the new-URL batch MATERIALIZED via `mat`
+    * (callers pass localCheckpoint), so the output is safe for the
+    * order-sensitive rank pass and is scanned — not recomputed — by its
+    * several consumers. The broadcast batch bloom is released from the
+    * executors once `mat` has returned.
     */
   def newUrlsScanProbe(
       candidates: DataFrame,
       seen: DataFrame,
       orderCols: Seq[String],
-      bank: Seq[org.apache.spark.broadcast.Broadcast[BloomFilter]],
       mat: DataFrame => DataFrame,
       broadcastLimit: Long,
       candidateCount: Long,
@@ -94,11 +91,11 @@ object Sieve {
     val spark = candidates.sparkSession
     // batch bloom over ALL candidate hashes: one column-pruned scan of the
     // (columnar-cached) candidate batch — the batch itself is NOT
-    // materialized for this. Bank-negative (sure-new) candidates cannot be
-    // in seen, so `present` computed from the all-candidates bloom equals
-    // seen ∩ batch exactly (plus ~seen*fpp false positives). Callers that
-    // already aggregated the batch (e.g. fusing the filter build with the
-    // candidate count via bloom_agg) pass the filter in and skip the pass.
+    // materialized for this. `present` computed from the all-candidates
+    // bloom equals seen ∩ batch exactly (plus ~seen*fpp false positives).
+    // Callers that already aggregated the batch (e.g. fusing the filter
+    // build with the candidate count via bloom_agg) pass the filter in and
+    // skip the pass.
     // empty batch: nothing can be present in seen, and building a bloom
     // over zero rows is ill-defined (Spark's stat.bloomFilter NPEs on it)
     if (candidateCount == 0 && prebuiltBatchBloom == null)
@@ -107,51 +104,45 @@ object Sieve {
       if (prebuiltBatchBloom != null) prebuiltBatchBloom
       else candidates.stat.bloomFilter("urlHash",
         math.max(candidateCount, 1024L), batchFpp)
-    val bb = Seq(spark.sparkContext.broadcast(batchBloom))
-    val presentPlan = seen.where(graft.functions.might_contain_bank(col("urlHash"), bb))
-    val deduped = Ranking.firstPerKey(candidates, "urlHash", orderCols)
-    // |present| <= |batch| + |seen|*fpp: when that bound already fits the
-    // broadcast limit, skip the materialize-and-count barriers entirely —
-    // the broadcast exchange inside the anti-join evaluates the seen scan
-    // exactly once, and the whole sieve tail is ONE job instead of three
-    // (materialize present, count present, anti-join).
-    // the |present| bound below assumes the batch bloom was sized for (at
-    // least) this batch at `batchFpp`. An undersized caller-prebuilt
-    // filter (e.g. one whose bloom_agg build was clamped by the session's
-    // runtime-filter numBits cap) has a HIGHER real fpp, so the bound is
-    // invalid — but the sieve itself stays correct (the bloom is only a
-    // prefilter; the anti-join below is exact), so the right response is
-    // to SKIP the bound-based shortcut and fall through to the
-    // materialize-and-count path that measures |present| exactly, not to
-    // abort a crawl hours in over a degraded prefilter.
-    val boundValid = prebuiltBatchBloom == null ||
-      prebuiltBatchBloom.bitSize() >=
-        BloomFilter.optimalNumOfBits(math.max(candidateCount, 1024L), batchFpp)
-    val presentUpper =
-      if (seenCount < 0 || !boundValid) Long.MaxValue
-      else candidateCount + math.ceil(seenCount * batchFpp).toLong
-    if (presentUpper <= broadcastLimit)
-      return mat(deduped.join(broadcast(presentPlan), Seq("urlHash"), "left_anti"))
-    val present = mat(presentPlan)
-    val presentCount = present.count()
-    if (presentCount == 0) return mat(deduped)
-    if (presentCount <= broadcastLimit)
-      // ONE materialization of the batch: dedup feeds the broadcast
-      // anti-join directly (a hash-set probe per row costs what the bloom
-      // probe did, and replaces it)
-      mat(deduped.join(broadcast(present), Seq("urlHash"), "left_anti"))
-    else {
-      // oversized present set (a mostly-already-seen batch): split the
-      // batch with the URL-seen bloom bank so only the maybe-seen leg
-      // pays the shuffle join — and both legs are still joined against
-      // `present`, never against the full seen store
-      require(bank.nonEmpty, "newUrlsScanProbe fallback needs the bloom bank")
-      val flagged = mat(deduped.withColumn("__maybe",
-        graft.functions.might_contain_bank(col("urlHash"), bank)))
-      val sure = flagged.where(!col("__maybe")).drop("__maybe")
-      val maybe = flagged.where(col("__maybe")).drop("__maybe")
-      sure.unionByName(mat(maybe.join(present, Seq("urlHash"), "left_anti")))
-    }
+    val bb = spark.sparkContext.broadcast(batchBloom)
+    try {
+      val presentPlan = seen.where(graft.functions.might_contain_bank(col("urlHash"), Seq(bb)))
+      val deduped = Ranking.firstPerKey(candidates, "urlHash", orderCols)
+      // |present| <= |batch| + |seen|*fpp: when that bound already fits the
+      // broadcast limit, skip the materialize-and-count barriers entirely —
+      // the broadcast exchange inside the anti-join evaluates the seen scan
+      // exactly once, and the whole sieve tail is ONE job instead of three
+      // (materialize present, count present, anti-join).
+      // the |present| bound below assumes the batch bloom was sized for (at
+      // least) this batch at `batchFpp`. An undersized caller-prebuilt
+      // filter (e.g. one whose bloom_agg build was clamped by the session's
+      // runtime-filter numBits cap) has a HIGHER real fpp, so the bound is
+      // invalid — but the sieve itself stays correct (the bloom is only a
+      // prefilter; the anti-join below is exact), so the right response is
+      // to SKIP the bound-based shortcut and fall through to the
+      // materialize-and-count path that measures |present| exactly, not to
+      // abort a crawl hours in over a degraded prefilter.
+      val boundValid = prebuiltBatchBloom == null ||
+        prebuiltBatchBloom.bitSize() >=
+          BloomFilter.optimalNumOfBits(math.max(candidateCount, 1024L), batchFpp)
+      val presentUpper =
+        if (seenCount < 0 || !boundValid) Long.MaxValue
+        else candidateCount + math.ceil(seenCount * batchFpp).toLong
+      if (presentUpper <= broadcastLimit)
+        return mat(deduped.join(broadcast(presentPlan), Seq("urlHash"), "left_anti"))
+      val present = mat(presentPlan)
+      val presentCount = present.count()
+      if (presentCount == 0) return mat(deduped)
+      if (presentCount <= broadcastLimit)
+        // ONE materialization of the batch: dedup feeds the broadcast
+        // anti-join directly (a hash-set probe per row costs what the bloom
+        // probe did, and replaces it)
+        mat(deduped.join(broadcast(present), Seq("urlHash"), "left_anti"))
+      else
+        // oversized present set (a mostly-already-seen batch): a shuffle
+        // join against `present`, never against the full seen store
+        mat(deduped.join(present, Seq("urlHash"), "left_anti"))
+    } finally bb.unpersist(blocking = false)
   }
 
   /** Row count + bloom filter over `hashCol` in ONE pass, with a PARALLEL

@@ -225,15 +225,11 @@ object BloomBank {
 }
 
 /** Codegen'd membership probe against a BANK of individually-broadcast
-  * bloom filters (the sieve's consolidated base + per-round deltas). Every
-  * candidate URL crosses this once per round — as a Scala UDF it forced a
+  * bloom filters, true iff any of them might contain the value (the
+  * scan-probe sieve's seen-store prefilter and the compaction's
+  * tombstone prefilter). As a Scala UDF it forced a
   * codegen->Scala boundary per row on the widest stream; as a native
   * expression the prefilter stays inside whole-stage codegen.
-  *
-  * Each filter is broadcast ONCE when it is built: re-broadcasting the
-  * whole (tens-of-MB) bank every round serialized it on the driver and
-  * re-shipped it to every executor per round — per-filter broadcasts make
-  * the per-round cost just the (small) new delta.
   *
   * The bank is a Seq (NOT an Array) so case-class equality is structural:
   * two probes over the same broadcast handles compare equal, keeping
@@ -246,7 +242,7 @@ case class MightContainBank(child: Expression,
   override def nullSafeEval(input: Any): Any =
     BloomBank.mightContain(filters, input.asInstanceOf[Long])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bankRef = ctx.addReferenceObj("bloomBankRefs", bank.toArray,
+    val bankRef = ctx.addReferenceObj("bankRefs", bank.toArray,
       "org.apache.spark.broadcast.Broadcast[]")
     // unwrap the broadcasts ONCE per task, not per row
     val arr = ctx.addMutableState("org.apache.spark.util.sketch.BloomFilter[]", "bloomArr",

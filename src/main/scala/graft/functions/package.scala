@@ -44,9 +44,8 @@ package object functions {
   def digest_of_spans(host: Column, spans: Column, status: Column, location: Column): Column =
     mkCol(DigestOfSpans(Seq(toExpr(host), toExpr(spans), toExpr(status), toExpr(location))))
 
-  /** True iff any bloom filter in the bank (each broadcast once, at build
-    * time) might contain the long value (codegen'd; the sieve's URL-seen
-    * prefilter). */
+  /** True iff any bloom filter in the bank might contain the long value
+    * (codegen'd; the scan-probe sieve's and the compaction's prefilter). */
   def might_contain_bank(c: Column,
       bank: Seq[org.apache.spark.broadcast.Broadcast[org.apache.spark.util.sketch.BloomFilter]]): Column =
     mkCol(MightContainBank(toExpr(c), bank.toIndexedSeq))

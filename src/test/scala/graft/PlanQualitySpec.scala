@@ -125,12 +125,11 @@ class PlanQualitySpec extends AnyFunSuite {
     val batch = (1L to 2000L).map(i => (s"u$i", i, 0L, i))
       .toDF("url", "urlHash", "parentSeq", "linkIdx").localCheckpoint(true)
     val seen = (1L to 900L).toDF("urlHash").localCheckpoint(true)
-    val bloom = seen.stat.bloomFilter("urlHash", 1000, 0.01)
-    // the scan-probe's bank-split fallback (present set over the broadcast
-    // limit); identity `mat` keeps the bank prefilter in the final plan
+    // the scan-probe's oversized-present fallback (present set over the
+    // broadcast limit); identity `mat` keeps the batch-bloom prefilter of
+    // the present set in the final plan
     val out = graft.frontier.Sieve.newUrlsScanProbe(batch, seen, Seq("parentSeq", "linkIdx"),
-      Seq(spark.sparkContext.broadcast(bloom)), mat = identity, broadcastLimit = 10L,
-      candidateCount = 2000L)
+      mat = identity, broadcastLimit = 10L, candidateCount = 2000L)
     val plan = finalPlan(out)
     assert(!plan.contains("UDF"), s"sieve prefilter fell back to a Scala UDF:\n$plan")
     assert(plan.contains("might_contain_bank"), s"expected the bank expression:\n$plan")
@@ -157,30 +156,27 @@ class PlanQualitySpec extends AnyFunSuite {
     val batch = (99001L to 102000L).map(i => (s"u$i", i, 0L, i))
       .toDF("url", "urlHash", "parentSeq", "linkIdx").localCheckpoint(true)
     val seen = (1L to 100000L).toDF("urlHash").localCheckpoint(true)
-    val bloom = seen.stat.bloomFilter("urlHash", 100000, 0.01)
     spark.sparkContext.addSparkListener(listener)
     try {
       val out = graft.frontier.Sieve.newUrlsScanProbe(batch, seen,
-        Seq("parentSeq", "linkIdx"), Seq(spark.sparkContext.broadcast(bloom)),
-        mat = df => df.localCheckpoint(true), broadcastLimit = 1L << 20,
-        candidateCount = 3000L)
+        Seq("parentSeq", "linkIdx"), mat = df => df.localCheckpoint(true),
+        broadcastLimit = 1L << 20, candidateCount = 3000L)
       assert(out.select("urlHash").as[Long].collect().toSet == (100001L to 102000L).toSet)
       assert(!finalPlan(out).contains("SortMergeJoin"))
       // barrier-free shortcut: with a seen count, the present-set bound
       // fits the broadcast limit and the materialize+count barriers are
       // skipped — same exact result, still no SMJ
       val outFast = graft.frontier.Sieve.newUrlsScanProbe(batch, seen,
-        Seq("parentSeq", "linkIdx"), Seq(spark.sparkContext.broadcast(bloom)),
-        mat = df => df.localCheckpoint(true), broadcastLimit = 1L << 20,
+        Seq("parentSeq", "linkIdx"), mat = df => df.localCheckpoint(true),
+        broadcastLimit = 1L << 20,
         candidateCount = 3000L, seenCount = 100000L)
       assert(outFast.select("urlHash").as[Long].collect().toSet == (100001L to 102000L).toSet)
       assert(!finalPlan(outFast).contains("SortMergeJoin"))
-      // the oversized-present fallback path is exact too (bank-split +
-      // join against present, still never against the full seen store)
+      // the oversized-present fallback path is exact too (shuffle join
+      // against present, still never against the full seen store)
       val outFb = graft.frontier.Sieve.newUrlsScanProbe(batch, seen,
-        Seq("parentSeq", "linkIdx"), Seq(spark.sparkContext.broadcast(bloom)),
-        mat = df => df.localCheckpoint(true), broadcastLimit = 10L,
-        candidateCount = 3000L)
+        Seq("parentSeq", "linkIdx"), mat = df => df.localCheckpoint(true),
+        broadcastLimit = 10L, candidateCount = 3000L)
       assert(outFb.select("urlHash").as[Long].collect().toSet == (100001L to 102000L).toSet)
       // let straggler stage-completed events drain
       var last = -1L

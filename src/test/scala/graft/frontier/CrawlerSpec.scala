@@ -50,29 +50,28 @@ class CrawlerSpec extends AnyFunSuite {
     assertOracleParity(crawler, cfg)
   }
 
-  test("bloom on/off produce identical crawls") {
-    val d1 = tempDir("bloomOn")
-    val d2 = tempDir("bloomOff")
-    // bloomMinSeen=1 forces the bank + fused batch-bloom/delta-bloom path
-    // even at spec scale (the default 50k gate would skip blooms entirely
-    // on a tiny crawl and the test would compare identical code paths);
-    // Long.MaxValue keeps the bank off for the whole crawl
-    val c1 = new Crawler(spark, d1,
-      cfg.copy(bloomMinSeen = 1L, bloomExpected = 4096L, maxRounds = 4))
+  test("plain and scan-probe round sieves produce identical crawls") {
+    val d1 = tempDir("scanProbe")
+    val d2 = tempDir("plain")
+    // bloomMinSeen=1 puts every round on the scan-probe sieve (fused
+    // batch-bloom count) even at spec scale (the default 50k gate would
+    // keep a tiny crawl on the plain anti-join and the test would compare
+    // identical code paths); Long.MaxValue keeps the plain anti-join
+    val c1 = new Crawler(spark, d1, cfg.copy(bloomMinSeen = 1L, maxRounds = 4))
     val c2 = new Crawler(spark, d2, cfg.copy(bloomMinSeen = Long.MaxValue, maxRounds = 4))
     c1.run(); c2.run()
     assert(collectTrace(c1) == collectTrace(c2))
   }
 
-  test("aggressive compaction + tombstone fold + bloom consolidation preserve the crawl") {
+  test("aggressive compaction + tombstone fold on the scan-probe path preserve the crawl") {
     val d1 = tempDir("gcAggressive")
     val d2 = tempDir("gcDefault")
-    // every state-GC path fires constantly: tombstone compaction every ~50
-    // rows, delta-union fold at 2 parts, bloom bank consolidated (and the
-    // dropped broadcasts unpersisted) every 2 deltas — all performance-
-    // shape knobs, so the crawl must be byte-identical to the default
+    // every state-GC path fires constantly, with every round on the
+    // scan-probe sieve: tombstone compaction every ~50 rows, delta-union
+    // fold at 2 parts — all performance-shape knobs, so the crawl must be
+    // byte-identical to the default
     val c1 = new Crawler(spark, d1, cfg.copy(
-      bloomMinSeen = 1L, bloomExpected = 4096L, bloomMaxDeltas = 2,
+      bloomMinSeen = 1L,
       tombstoneCompactRows = 50L, tombstoneFoldParts = 2,
       checkpointEvery = 99, maxRounds = 5))
     val c2 = new Crawler(spark, d2, cfg.copy(maxRounds = 5))
@@ -93,10 +92,22 @@ class CrawlerSpec extends AnyFunSuite {
     val part2 = new Crawler(spark, dSplit, cfg.copy(maxRounds = 5))
     part2.run()
 
-    assert(collectTrace(full) == collectTrace(part2))
+    val traceFull = collectTrace(full)
     val seenFull = full.seenHashes().collect().map(_.getLong(0)).toSet
-    val seenSplit = part2.seenHashes().collect().map(_.getLong(0)).toSet
-    assert(seenFull == seenSplit)
+    def assertSameCrawl(resumed: Crawler, path: String): Unit = {
+      assert(collectTrace(resumed) == traceFull, path)
+      assert(resumed.seenHashes().collect().map(_.getLong(0)).toSet == seenFull, path)
+    }
+    assertSameCrawl(part2, "plain sieve")
+
+    // the same split with every round on the scan-probe sieve: the resumed
+    // instance starts from the snapshot alone, with no filter carried over
+    val dProbe = tempDir("splitProbe")
+    val probe = cfg.copy(bloomMinSeen = 1L)
+    new Crawler(spark, dProbe, probe.copy(maxRounds = 2)).run()
+    val probe2 = new Crawler(spark, dProbe, probe.copy(maxRounds = 5))
+    probe2.run()
+    assertSameCrawl(probe2, "scan-probe sieve")
   }
 
   test("parallelism independence: shuffle partitions do not change the crawl") {

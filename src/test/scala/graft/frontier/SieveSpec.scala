@@ -72,15 +72,14 @@ class SieveSpec extends AnyFunSuite {
     assert(exact.nonEmpty && exact.forall(u => !seenUrls.contains(u)))
     // the scan-probe round path, through each of its three shapes: the
     // |present| bound shortcut (seen count known), the broadcast-present
-    // path (count unknown), and the bank-split fallback (present set over
-    // the broadcast limit)
-    val bank = Seq(spark.sparkContext.broadcast(seen.stat.bloomFilter("urlHash", 200, 0.01)))
+    // path (count unknown), and the oversized-present fallback (present
+    // set over the broadcast limit)
     def probe(limit: Long, seenCount: Long) = urls(Sieve.newUrlsScanProbe(b, seen, order,
-      bank, mat = _.localCheckpoint(true), broadcastLimit = limit,
+      mat = _.localCheckpoint(true), broadcastLimit = limit,
       candidateCount = mixed.size.toLong, seenCount = seenCount))
     assert(probe(1L << 20, seenUrls.size.toLong) == exact, "bound shortcut")
     assert(probe(1L << 20, -1L) == exact, "broadcast-present path")
-    assert(probe(10L, -1L) == exact, "bank-split fallback")
+    assert(probe(10L, -1L) == exact, "oversized-present fallback")
   }
 
   test("bloom_agg builds a filter with stat.bloomFilter membership semantics") {
