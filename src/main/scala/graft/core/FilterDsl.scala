@@ -148,7 +148,7 @@ object FilterDsl {
   // ---------------- atom registry (reference Filters.java:44-52) ----------------
 
   private def atom(name: String, raw: String, ctx: FilterContext): Column = {
-    import graft.functions.duplicate_segments_lt
+    import graft.functions.{duplicate_segments_lt, lower_root}
     def a0: String = {
       if (raw.isEmpty) throw new IllegalArgumentException(s"$name requires an argument")
       raw
@@ -161,8 +161,10 @@ object FilterDsl {
       case "HostEndsWithOneOf" =>
         list.map(s => ctx.get("host", ctx.host).endsWith(s)).reduce(_ || _)
       case "PathEndsWithOneOf" =>
-        // reference lowercases the raw path before the suffix test
-        list.map(s => lower(ctx.get("path", ctx.path)).endsWith(s.toLowerCase)).reduce(_ || _)
+        // reference lowercases the raw path before the suffix test, with
+        // JVM semantics (PathEndsWithOneOf.java:55-59)
+        val lowered = lower_root(ctx.get("path", ctx.path))
+        list.map(s => lowered.endsWith(s.toLowerCase(java.util.Locale.ROOT))).reduce(_ || _)
       case "URLMatchesRegex" =>
         // reference uses full-match semantics (URLMatchesRegex.java:54-56);
         // the RAW argument text is the regex (commas/braces intact)

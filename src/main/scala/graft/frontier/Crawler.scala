@@ -93,7 +93,10 @@ case class CrawlConfig(
     /** shuffle/write parallelism for the state tables */
     statePartitions: Int = 32,
     /** compact the frontier (drop tombstoned rows) once this many
-      * tombstones accumulate (WorkbenchVirtualizer.java:132-143 GC analog) */
+      * tombstones accumulate (WorkbenchVirtualizer.java:132-143 GC analog).
+      * Between compactions every round's selection broadcasts the whole
+      * tombstone set (the pending-frontier anti-join, which compaction
+      * reuses), so this also bounds that broadcast */
     tombstoneCompactRows: Long = 2L << 20,
     /** fold the lazy tombstone-delta union chain once it has this many
       * parts (plan-size hygiene between compactions) */
@@ -132,6 +135,8 @@ case class FetchUnit(
   *              scan-probe, first-enqueue order) |> budget
   *   state'   = append frontier delta; tombstone consumed rows; update
   *              hosts/ips via broadcast of the per-round host aggregate
+  *   pending  = frontier ⋉̸ broadcast(tombstones) — read by `heads`, and
+  *              materialized at compaction and snapshot
   * }}}
   *
   * Per-round cost: one linear scan of the frontier (the heads
@@ -199,6 +204,18 @@ object Crawler {
       col("__dupInBatch") || coalesce(col("__dupAcross"), lit(false)))
   }
 
+  /** The pending frontier: the append-only table minus its `tombstones`
+    * (hashes of fetched/dropped rows, `tombstoneRows` of them), as a
+    * broadcast left-anti join — a scan-side filter, no frontier shuffle or
+    * sort. The one deletion path: `select` reads it every round, and
+    * compaction/snapshot materialize it. The tombstone set is at most
+    * `tombstoneCompactRows` plus one round's delta, so compaction
+    * broadcasts nothing `select` does not already broadcast. */
+  private[graft] def pendingFrontier(frontier: DataFrame, tombstones: DataFrame,
+      tombstoneRows: Long): DataFrame =
+    if (tombstoneRows == 0) frontier
+    else frontier.join(broadcast(tombstones), Seq("urlHash"), "left_anti")
+
   /** Shared daemon pool for the concurrent per-round actions. */
   private[frontier] lazy val actionPool: scala.concurrent.ExecutionContext =
     scala.concurrent.ExecutionContext.fromExecutor(
@@ -219,23 +236,28 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
   spark.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "262144")
   // each round compiles ~200 distinct codegen units; the default 100-entry
   // codegen cache THRASHES across rounds and re-Janino-compiles the whole
-  // loop every round (round-varying scalars are plan references via
-  // ref_long, so the sources are cache-stable) — this is a static JVM-wide
-  // conf, set it before the first session when running standalone
-  try spark.conf.set("spark.sql.codegen.cache.maxEntries", "10000")
-  catch { case _: org.apache.spark.sql.AnalysisException => () } // static conf set too late: harness sets it at session build
-  // bloom_agg (the fused filter builds) is clamped by the runtime-filter
-  // size caps (default 4M items / 67M bits — far below a large round's
-  // link batch); raise them so the fused filters keep their sized
-  // fpp instead of silently degrading. The caps also govern Spark's own
-  // InjectRuntimeFilter for every query on the session, so the raise is
-  // SCOPED to run() (set before the first round, restored after the last)
-  // rather than left session-wide for harness-shared sessions.
-  private val bloomCapKeys = Seq(
+  // loop every round. spark.sql.codegen.cache.maxEntries is a static conf
+  // that a built session rejects, so the session's builder must raise it
+  // (Main, Bench and build.sbt's forked JVMs set 10000)
+  // Confs SCOPED to run() (set before the first round, restored after the
+  // last) because they govern every query on the session, and harnesses
+  // share sessions:
+  //  - codegen class names without the stage id: round-varying scalars are
+  //    plan references (ref_long), so a steady round's sources repeat the
+  //    previous round's — but whole-stage class names embed the stage id,
+  //    which shifts as the frontier/seen/tombstone unions grow, so the
+  //    sources only hit the codegen cache once the id is left out;
+  //  - bloom_agg (the fused filter builds) is clamped by the runtime-filter
+  //    size caps (default 4M items / 67M bits — far below a large round's
+  //    link batch); raise them so the fused filters keep their sized fpp
+  //    instead of silently degrading (the caps also govern Spark's own
+  //    InjectRuntimeFilter).
+  private val runConfs = Seq(
+    "spark.sql.codegen.useIdInClassName" -> "false",
     "spark.sql.optimizer.runtime.bloomFilter.maxNumItems" -> (256L << 20).toString,
     "spark.sql.optimizer.runtime.bloomFilter.maxNumBits" -> (8L << 30).toString)
-  private def withRaisedBloomCaps[T](body: => T): T = {
-    val prev = bloomCapKeys.map { case (k, v) =>
+  private def withRunConfs[T](body: => T): T = {
+    val prev = runConfs.map { case (k, v) =>
       val old = spark.conf.getOption(k); spark.conf.set(k, v); k -> old
     }
     try body
@@ -328,7 +350,9 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
     * localCheckpoint); rebuilt from the last parquet snapshot on resume. */
   private case class LiveState(round: Int, maxSeq: Long, frontSize: Long,
       frontier: DataFrame, hosts: DataFrame, ips: DataFrame,
-      seen: DataFrame, digests: DataFrame, tombs: Tombstones, pendingRows: Long)
+      seen: DataFrame, digests: DataFrame, tombs: Tombstones, pendingRows: Long) {
+    def pending: DataFrame = Crawler.pendingFrontier(frontier, tombs.set, tombs.rows)
+  }
   private var live: Option[LiveState] = None
 
   // ---------------- initialization (round 0) ----------------
@@ -347,20 +371,23 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
 
     val emptySeen = spark.emptyDataset[Long].toDF("urlHash")
     val parts = math.max(1, cfg.statePartitions)
-    val (newUrls, _) = Sieve.assignSeq(
+    // the rank pass's bucket counts are the frontier's row count
+    val (newUrls, maxSeq) = Sieve.assignSeq(
       Sieve.newUrls(candidates, emptySeen, Seq("parentSeq", "linkIdx")).transform(lc),
       Seq("parentSeq", "linkIdx"), startSeq = -1L, // seqs from 0
       Sieve.linearBuckets(col("linkIdx"), 0, cfg.nSeeds - 1L, parts * 8))
 
     val frontier = toFrontier(newUrls).transform(lc)
-    frontier.select("urlHash").write.options(graft.util.FastLocalFs.writeOptions).mode(SaveMode.Overwrite).parquet(appendDir("seen", 0))
-    val hosts = newHostsFrom(frontier, emptyHosts).transform(lc)
-    val ips = newIpsFrom(frontier, emptyIps).transform(lc)
-    val maxSeq = frontier.count()
+    val seen = frontier.select("urlHash")
+    var hosts: DataFrame = null
+    var ips: DataFrame = null
+    inParallel(
+      () => seen.write.options(graft.util.FastLocalFs.writeOptions).mode(SaveMode.Overwrite).parquet(appendDir("seen", 0)),
+      () => hosts = newHostsFrom(frontier, emptyHosts).transform(lc),
+      () => ips = newIpsFrom(frontier, emptyIps).transform(lc))
     writeState(0, frontier, hosts, ips, maxSeq, cfg.initialFrontSize)
     live = Some(LiveState(0, maxSeq, cfg.initialFrontSize, frontier, hosts, ips,
-      frontier.select("urlHash").transform(lc), emptyDigests,
-      noTombstones, pendingRows = maxSeq))
+      seen, emptyDigests, noTombstones, pendingRows = maxSeq))
   }
 
   private def emptyHosts = spark.emptyDataset[HostState].toDF
@@ -566,11 +593,7 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
   /** Politeness selection (SURVEY.md §2.5 workbench) and the fetch units of
     * the selected hosts: robots.txt first, then the gated head window. */
   private def select(st: LiveState, round: Int): Selection = {
-    // pending view: append-only frontier minus tombstoned (fetched/dropped)
-    // rows; broadcast anti-join = scan-side filter, no frontier shuffle
-    val frontier =
-      if (st.tombs.rows == 0) st.frontier
-      else st.frontier.join(broadcast(st.tombs.set), Seq("urlHash"), "left_anti")
+    val frontier = st.pending
 
     // ONE pass over the frontier: per-host head window (k' smallest seqs)
     // via hash aggregation with map-side combine — the shuffle carries at
@@ -878,10 +901,15 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
     // Link.java:26-39): the parent host column rides along only when the
     // DSL actually references it — burl_host per link is hot-path cost
     val linkTyped = cfg.scheduleFilter.contains("SameHost")
+    // each link is parsed ONCE, inside the explode: a filter over a
+    // projected `burl_parse(spec)` is pushed below the projection with the
+    // parse substituted into every atom, and FilterExec shares no
+    // subexpressions, so the schedule filter would re-parse per atom
     val rawLinks = linkSources
       .select((col("seq").as("parentSeq") +:
         (if (linkTyped) Seq(burl_host(col("url")).as("srcHost")) else Nil)) :+
-        posexplode(coalesce(col("links"), array())).as(Seq("linkIdx", "spec")): _*)
+        posexplode(burl_parse_each(coalesce(col("links"), array())))
+          .as(Seq("linkIdx", "url")): _*)
     val hostBlacklistGate =
       if (cfg.blacklistHosts.isEmpty) lit(true)
       else !burl_host(col("url")).isin(cfg.blacklistHosts: _*)
@@ -893,7 +921,6 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
       if (linkTyped) schedCtx0.copy(srcHost = Some(col("srcHost")), dstHost = schedCtx0.host)
       else schedCtx0
     rawLinks
-      .withColumn("url", burl_parse(col("spec")))
       .where(col("url").isNotNull)
       .where(FilterDsl.compile(cfg.scheduleFilter, schedCtx))
       .where(hostBlacklistGate && ipBlacklistGate)
@@ -1148,68 +1175,27 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
     * compacted once `tombstoneCompactRows` tombstones accumulate
     * (WorkbenchVirtualizer.java:132-143 GC analog). */
   private def commit(next: LiveState, snap: Boolean): Unit = {
-    // lazy: the compacted view costs a bloom-build job (see
-    // compactFrontier), paid only on the rounds that snapshot or compact
-    lazy val compacted = compactFrontier(next.frontier, next.tombs)
     live = Some(
       if (snap) {
-        writeState(next.round, compacted, next.hosts, next.ips, next.maxSeq, next.frontSize)
+        writeState(next.round, next.pending, next.hosts, next.ips, next.maxSeq, next.frontSize)
         next.copy(frontier = spark.read.parquet(stateDir(next.round, "frontier")),
           hosts = spark.read.parquet(stateDir(next.round, "hosts")),
           ips = spark.read.parquet(stateDir(next.round, "ips")),
           tombs = noTombstones)
       } else if (next.tombs.rows >= cfg.tombstoneCompactRows)
-        // amortized GC; re-spread by hostHash: the SMJ output would
-        // otherwise collapse to shuffle.partitions partitions whose
-        // per-partition distinct-host counts push the heads aggregation
-        // into its sort-based fallback (and hostHash layout lets the next
-        // heads groupBy skip its exchange entirely)
+        // amortized GC; re-spread by hostHash: the append-only union has
+        // one partition set per round, and hostHash layout lets the next
+        // heads groupBy skip its exchange entirely
         next.copy(
-          frontier = compacted.repartition(cfg.statePartitions * 4, col("hostHash")).transform(lc),
+          frontier = next.pending.repartition(cfg.statePartitions * 4, col("hostHash")).transform(lc),
           tombs = noTombstones)
       else next)
   }
 
-  /** frontier ∖ tombstones for compaction/snapshot. A plain sort-merge
-    * anti-join sorts and shuffles the WHOLE frontier to delete a few
-    * percent of its rows; instead probe a bloom built over the tombstone
-    * hashes (one cheap pass over the lc'd deltas): rows the filter
-    * rejects are definitely live and never shuffle, and only the
-    * maybe-tombstoned slice (true hits + fpp of the rest) pays the exact
-    * anti-join. Membership stays EXACT — false positives just ride the
-    * anti-join. The frontier inputs are lc'd/parquet so the two-predicate
-    * double scan re-reads cache/columnar blocks, not recomputed plans.
-    * Shuffle volume drops from O(frontier) to O(tombstones + fpp·frontier)
-    * — the same scan-probe shape the sieve uses against the seen store.
-    * The broadcast filter (~1.2 MB/M tombstones at 1% fpp) is dropped
-    * with the session; compaction fires once per `tombstoneCompactRows`
-    * (and once at the final snapshot), so handles don't accumulate. */
-  private def compactFrontier(frontier: DataFrame, tombs: Tombstones): DataFrame = {
-    if (tombs.rows <= 0) frontier
-    else {
-      val (_, bf) = Sieve.bloomAggParallel(tombs.set, "urlHash",
-        math.max(tombs.rows, 1024L), CompactBloomFpp, bloomMergeGroups)
-      if (bf == null) frontier
-      else {
-        val hit = might_contain_bank(col("urlHash"),
-          Seq(spark.sparkContext.broadcast(bf)))
-        frontier.where(!hit).unionByName(
-          frontier.where(hit)
-            .join(tombs.set.hint("shuffle_merge"), Seq("urlHash"), "left_anti"))
-      }
-    }
-  }
-
-  /** fpp of the compaction prefilter: false positives only divert rows to
-    * the exact anti-join, so this trades filter size against the maybe-
-    * slice's shuffle volume (1% of the frontier). */
-  private val CompactBloomFpp = 0.01
-
   /** Force a snapshot of the current live state (used at end of run). */
   private def snapshotLive(): Unit = live.foreach { st =>
     if (!exists(stateDir(st.round, "scalars") + "/_SUCCESS")) {
-      writeState(st.round, compactFrontier(st.frontier, st.tombs),
-        st.hosts, st.ips, st.maxSeq, st.frontSize)
+      writeState(st.round, st.pending, st.hosts, st.ips, st.maxSeq, st.frontSize)
     }
   }
 
@@ -1232,7 +1218,7 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
   /** Run (or resume) the crawl up to cfg.maxRounds; returns rounds executed.
     * A round with zero fetches is a politeness wait, not necessarily the
     * end: the crawl is drained only when the frontier itself is empty. */
-  def run(): Int = withRaisedBloomCaps {
+  def run(): Int = withRunConfs {
     var round = lastCompleteRound()
     if (round < 0) {
       val ti = System.nanoTime()

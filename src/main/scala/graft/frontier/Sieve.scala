@@ -158,8 +158,8 @@ object Sieve {
     *
     * Driver-transfer bound: each group ships a FULL-SIZE filter to the
     * driver, so the collect is groups × filterBytes — at large `expected`
-    * (e.g. a 10^8-tombstone compaction filter ≈ 114 MB at 1% fpp) a
-    * 16-way group split would be ~1.8 GB, past the default
+    * (e.g. a 10^8-URL batch filter ≈ 180 MB at the 0.1% batch fpp) a
+    * 16-way group split would be ~2.9 GB, past the default
     * spark.driver.maxResultSize cliff the delta-bloom redesign documented
     * (Crawler's bloom_agg comment). `groups` is therefore clamped so the
     * transfer stays ≤ 256 MB: big filters degrade gracefully toward the

@@ -12,10 +12,13 @@ import graft.core.{Burl, DuplicateSegments, MurmurHash3Bubing, Robots}
 
 /** Catalyst scalar expressions for the crawl engine (SURVEY.md §2.11).
   *
-  * `Murmur64Bubing` is whole-stage-codegen'd (it sits on the sieve hot path:
-  * every candidate URL is hashed once per round). The URL/robots string
-  * expressions use interpreted eval (`CodegenFallback`-style): they run only
-  * on the new-URL batch, where `java.net.URI` dominates the cost anyway.
+  * The per-URL expressions (`Murmur64Bubing`, `BurlParse`, `BurlParseEach`,
+  * `BurlPart`, `DuplicateSegmentsLT`, `LowerRoot`, `IpOfHost`) are
+  * whole-stage-codegen'd as static calls into `graft.core`: they run on
+  * every outlink of every round, where a `CodegenFallback` would evaluate
+  * its whole argument subtree interpretively, once per reference. The
+  * robots, digest and near-dup expressions use interpreted eval
+  * (`CodegenFallback`).
   */
 
 /** BUbiNG 64-bit MurmurHash3 of a string/binary column
@@ -70,38 +73,97 @@ case class RefLong(value: Long, tag: String) extends org.apache.spark.sql.cataly
 abstract class InterpretedUnary extends UnaryExpression
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 
-/** BURL normalization (reference `bubing/util/BURL.java:132-260`); null for
-  * malformed specs, hence `nullable` regardless of child nullability. */
-case class BurlParse(child: Expression) extends InterpretedUnary {
+/** A string -> string expression computed by ONE static `graft.core` call
+  * (`fn` for interpreted eval, `staticFn` its fully qualified name for
+  * generated code); a null result is SQL null, hence `nullable` regardless
+  * of child nullability. */
+abstract class StaticStringUnary extends UnaryExpression {
+  protected def fn(s: String): String
+  protected def staticFn: String
   override def dataType: DataType = StringType
   override def nullable: Boolean = true
   override def nullSafeEval(input: Any): Any = {
-    val out = Burl.parse(input.asInstanceOf[UTF8String].toString)
+    val out = fn(input.asInstanceOf[UTF8String].toString)
     if (out == null) null else UTF8String.fromString(out)
   }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c => {
+      val out = ctx.freshName("out")
+      s"""String $out = $staticFn($c.toString());
+         |if ($out == null) { ${ev.isNull} = true; }
+         |else { ${ev.value} = UTF8String.fromString($out); }
+         |""".stripMargin
+    })
+}
+
+/** BURL normalization (reference `bubing/util/BURL.java:132-260`); null for
+  * malformed specs. */
+case class BurlParse(child: Expression) extends StaticStringUnary {
+  override protected def fn(s: String): String = Burl.parse(s)
+  override protected def staticFn: String = "graft.core.Burl.parse"
   override protected def withNewChildInternal(newChild: Expression): BurlParse = copy(child = newChild)
   override def prettyName: String = "burl_parse"
 }
 
+/** [[BurlParse]] over each element of a string array (null stays null):
+  * lets an explode emit parsed URLs, so the filters above it read the
+  * parse instead of repeating it per atom. */
+case class BurlParseEach(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = ArrayType(StringType, containsNull = true)
+  override def nullSafeEval(input: Any): Any = BurlArrays.parseEach(input.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.BurlArrays.parseEach($c)")
+  override protected def withNewChildInternal(newChild: Expression): BurlParseEach = copy(child = newChild)
+  override def prettyName: String = "burl_parse_each"
+}
+
+/** Static helper shared by interpreted eval and generated code. */
+object BurlArrays {
+  def parseEach(specs: ArrayData): ArrayData = {
+    val out = new Array[Any](specs.numElements())
+    var i = 0
+    while (i < out.length) {
+      if (!specs.isNullAt(i)) {
+        val u = Burl.parse(specs.getUTF8String(i).toString)
+        if (u != null) out(i) = UTF8String.fromString(u)
+      }
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
+}
+
 /** Decomposition of a normalized BURL (reference `BURL.java:377-477`).
   * `part` is one of scheme|host|schemeAuthority|pathQuery|path. */
-case class BurlPart(child: Expression, part: String) extends InterpretedUnary {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def nullSafeEval(input: Any): Any = {
-    val url = input.asInstanceOf[UTF8String].toString
-    val out = part match {
-      case "scheme"          => Burl.scheme(url)
-      case "host"            => Burl.host(url)
-      case "schemeAuthority" => Burl.schemeAndAuthority(url)
-      case "pathQuery"       => Burl.pathAndQuery(url)
-      case "path"            => Burl.path(url)
-      case other             => throw new IllegalArgumentException(s"unknown burl part: $other")
-    }
-    if (out == null) null else UTF8String.fromString(out)
+case class BurlPart(child: Expression, part: String) extends StaticStringUnary {
+  // the graft.core.Burl method behind each part, for eval and for codegen
+  private lazy val (method, partFn) = part match {
+    case "scheme"          => ("scheme", Burl.scheme _)
+    case "host"            => ("host", Burl.host _)
+    case "schemeAuthority" => ("schemeAndAuthority", Burl.schemeAndAuthority _)
+    case "pathQuery"       => ("pathAndQuery", Burl.pathAndQuery _)
+    case "path"            => ("path", Burl.path _)
+    case other             => throw new IllegalArgumentException(s"unknown burl part: $other")
   }
+  override protected def fn(s: String): String = partFn(s)
+  override protected def staticFn: String = s"graft.core.Burl.$method"
   override protected def withNewChildInternal(newChild: Expression): BurlPart = copy(child = newChild)
   override def prettyName: String = s"burl_$part"
+}
+
+/** Lower-case with JVM `Locale.ROOT` semantics (`String.toLowerCase`, as
+  * the reference's filters do). Spark's `lower` maps case through ICU,
+  * whose one-time class and data load stalls the first stage that runs
+  * it; this expression never touches ICU. */
+case class LowerRoot(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = StringType
+  override def nullSafeEval(input: Any): Any =
+    UTF8String.fromString(input.asInstanceOf[UTF8String].toString.toLowerCase(java.util.Locale.ROOT))
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev,
+      c => s"UTF8String.fromString($c.toString().toLowerCase(java.util.Locale.ROOT))")
+  override protected def withNewChildInternal(newChild: Expression): LowerRoot = copy(child = newChild)
+  override def prettyName: String = "lower_root"
 }
 
 /** Deterministic synthetic DNS (stands in for `frontier/dns/FakeResolver`). */
@@ -135,10 +197,13 @@ case class RespectsRobots(left: Expression, right: Expression) extends BinaryExp
 
 /** DuplicateSegmentsLessThan(k) filter
   * (reference `warc/filters/DuplicateSegmentsLessThan.java:50-130`). */
-case class DuplicateSegmentsLT(child: Expression, threshold: Int) extends InterpretedUnary {
+case class DuplicateSegmentsLT(child: Expression, threshold: Int) extends UnaryExpression {
   override def dataType: DataType = BooleanType
   override def nullSafeEval(input: Any): Any =
     DuplicateSegments.lessThan(input.asInstanceOf[UTF8String].toString, threshold)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev,
+      c => s"graft.core.DuplicateSegments.lessThan($c.toString(), $threshold)")
   override protected def withNewChildInternal(newChild: Expression): DuplicateSegmentsLT = copy(child = newChild)
   override def prettyName: String = "duplicate_segments_lt"
 }
@@ -226,8 +291,7 @@ object BloomBank {
 
 /** Codegen'd membership probe against a BANK of individually-broadcast
   * bloom filters, true iff any of them might contain the value (the
-  * scan-probe sieve's seen-store prefilter and the compaction's
-  * tombstone prefilter). As a Scala UDF it forced a
+  * scan-probe sieve's seen-store prefilter). As a Scala UDF it forced a
   * codegen->Scala boundary per row on the widest stream; as a native
   * expression the prefilter stays inside whole-stage codegen.
   *

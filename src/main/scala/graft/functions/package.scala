@@ -12,11 +12,18 @@ package object functions {
   /** URL normalization; null for malformed specs (BURL.parse). */
   def burl_parse(c: Column): Column = mkCol(BurlParse(toExpr(c)))
 
+  /** `burl_parse` of each element of a string array. */
+  def burl_parse_each(c: Column): Column = mkCol(BurlParseEach(toExpr(c)))
+
   def burl_scheme(c: Column): Column = mkCol(BurlPart(toExpr(c), "scheme"))
   def burl_host(c: Column): Column = mkCol(BurlPart(toExpr(c), "host"))
   def burl_scheme_authority(c: Column): Column = mkCol(BurlPart(toExpr(c), "schemeAuthority"))
   def burl_path_query(c: Column): Column = mkCol(BurlPart(toExpr(c), "pathQuery"))
   def burl_path(c: Column): Column = mkCol(BurlPart(toExpr(c), "path"))
+
+  /** `String.toLowerCase(Locale.ROOT)`; unlike Spark's `lower`, never
+    * loads ICU. */
+  def lower_root(c: Column): Column = mkCol(LowerRoot(toExpr(c)))
 
   /** Exact k-smallest-by-seq heads per group as one hash aggregation
     * (map-side partial combine; no window sort). */
@@ -45,7 +52,7 @@ package object functions {
     mkCol(DigestOfSpans(Seq(toExpr(host), toExpr(spans), toExpr(status), toExpr(location))))
 
   /** True iff any bloom filter in the bank might contain the long value
-    * (codegen'd; the scan-probe sieve's and the compaction's prefilter). */
+    * (codegen'd; the scan-probe sieve's prefilter). */
   def might_contain_bank(c: Column,
       bank: Seq[org.apache.spark.broadcast.Broadcast[org.apache.spark.util.sketch.BloomFilter]]): Column =
     mkCol(MightContainBank(toExpr(c), bank.toIndexedSeq))

@@ -193,6 +193,24 @@ class PlanQualitySpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  test("pending frontier (select, compaction, snapshot) is a broadcast left-anti join") {
+    import spark.implicits._
+    val frontier = (1L to 5000L).map(i => (s"u$i", i, i % 37, i % 11, i))
+      .toDF("url", "urlHash", "hostHash", "ipHash", "seq").localCheckpoint(true)
+    // the tombstone set as the crawl keeps it: a union of lc'd deltas
+    val tombs = (1L to 2500L by 7).toDF("urlHash").localCheckpoint(true)
+      .unionByName((2501L to 5000L by 7).toDF("urlHash").localCheckpoint(true))
+    val out = graft.frontier.Crawler.pendingFrontier(frontier, tombs, tombs.count())
+    val plan = finalPlan(out)
+    assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
+      s"expected a broadcast left-anti join:\n$plan")
+    assert(!plan.contains("might_contain_bank"), s"no bloom prefilter:\n$plan")
+    assert(!plan.contains("SortMergeJoin"), s"the frontier must not be sorted:\n$plan")
+    val dead = ((1L to 2500L by 7) ++ (2501L to 5000L by 7)).toSet
+    assert(out.select("urlHash").as[Long].collect().toSet == (1L to 5000L).toSet -- dead)
+    assert(graft.frontier.Crawler.pendingFrontier(frontier, tombs.limit(0), 0L) eq frontier)
+  }
+
   test("digest-dedup probe path: no full digests-store shuffle for a bounded burst") {
     import spark.implicits._
     val pages = (1L to 50L).map(i => (s"d${i % 20}", i)).toDF("digest", "seq")

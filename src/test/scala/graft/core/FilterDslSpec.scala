@@ -66,6 +66,65 @@ class FilterDslSpec extends AnyFunSuite {
       Seq("ftp://c.example.com/file"))
   }
 
+  test("PathEndsWithOneOf lower-cases with JVM Locale.ROOT semantics, never Spark's lower") {
+    import spark.implicits._
+    val urls = Seq(
+      "http://a.example/img/Pic.JPG", "http://a.example/img/pic.jpg",
+      "http://a.example/x/%C3%A9t%C3%A9.PnG", "http://a.example/caf%C3%A9.Jpeg",
+      "http://a.example/\u00C9T\u00C9.PNG", "http://a.example/\u0130.jpg",
+      "http://a.example/stra\u00DFe.GIF", "http://a.example/\u03A3\u039F\u03A6\u039F\u03A3",
+      "http://a.example/q.txt?x=.jpg", "http://a.example/").toDF("url")
+      .localCheckpoint(true) // an RDD input keeps the filter in the plan
+    for (list <- Seq(".jpg", ".JPG,.png", "\u00E9.png,%C3%A9.png", ".Jpeg,SSE.gif,\u00DFe.gif",
+        "\u03C3\u03BF\u03C6\u03BF\u03C3,.JPG", "i\u0307.jpg")) {
+      val suffixes = list.split(",").toSeq
+      val kept = urls.where(FilterDsl.compile(s"PathEndsWithOneOf($list)",
+        FilterDsl.urlContext(col("url"))))
+      val expected = urls.as[String].collect().filter(u => suffixes.exists(s =>
+        Burl.path(u).toLowerCase(java.util.Locale.ROOT).endsWith(s.toLowerCase(java.util.Locale.ROOT))))
+      assert(kept.as[String].collect().toSeq == expected.toSeq, list)
+      val plan = kept.queryExecution.optimizedPlan.toString
+      assert(plan.contains("lower_root(") && !plan.contains("lower("),
+        s"the filter must not use Spark's ICU lower:\n$plan")
+    }
+  }
+
+  test("codegen'd URL expressions equal the core functions, with and without codegen") {
+    import spark.implicits._
+    import graft.functions._
+    val specs = Seq("http://a.b/c/../a", "HTTP://A/B", "http://foo/Top/World/Espa\u00F1ol/",
+      "http://a/b c/", "http://a b/", "a%00", ":a))/", "http://a.b", "./a",
+      "http://x.example/a/b/a/b/a/b/z?q=1", "https://H.example:443/IMG/P.JPG", null)
+    // RDD inputs: over a local relation the optimizer evaluates the
+    // projections itself, and no generated code would run
+    val arr = Seq(specs).toDF("links").localCheckpoint(true)
+    val df = arr.select(posexplode(col("links")).as(Seq("i", "spec")))
+    def run(): Seq[Seq[Any]] = df
+      .select(col("i"), burl_parse(col("spec")).as("u"))
+      .select(col("i") +: col("u") +: Seq(
+        burl_scheme(col("u")), burl_host(col("u")), burl_scheme_authority(col("u")),
+        burl_path_query(col("u")), burl_path(col("u")),
+        duplicate_segments_lt(burl_path(col("u")), 3), lower_root(col("u"))): _*)
+      .orderBy("i").collect().map(_.toSeq.tail).toSeq
+    val expected = specs.map { spec =>
+      val u = if (spec == null) null else Burl.parse(spec)
+      if (u == null) Seq.fill(8)(null)
+      else Seq(u, Burl.scheme(u), Burl.host(u), Burl.schemeAndAuthority(u),
+        Burl.pathAndQuery(u), Burl.path(u), DuplicateSegments.lessThan(Burl.path(u), 3),
+        u.toLowerCase(java.util.Locale.ROOT))
+    }
+    assert(run() == expected)
+    val each = arr.select(burl_parse_each(col("links"))).as[Seq[String]]
+    assert(each.collect().head == specs.map(s => if (s == null) null else Burl.parse(s)))
+    val confs = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      assert(run() == expected)
+      assert(each.collect().head == specs.map(s => if (s == null) null else Burl.parse(s)))
+    } finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+
   test("parse errors are loud") {
     intercept[IllegalArgumentException](FilterDsl.compile("Bogus(x)", FilterDsl.urlContext(col("url"))))
     intercept[IllegalArgumentException](FilterDsl.compile("SchemeEquals(http", FilterDsl.urlContext(col("url"))))

@@ -79,6 +79,20 @@ class CrawlerSpec extends AnyFunSuite {
     assert(collectTrace(c1) == collectTrace(c2))
   }
 
+  test("steady rounds reuse the previous rounds' generated classes") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // the benchmark's round shape (robots off, every round fetches pages);
+    // the codegen cache must hold a round's classes, which build.sbt's
+    // spark.sql.codegen.cache.maxEntries gives the test JVM
+    val c = new Crawler(spark, tempDir("codegen"),
+      cfg.copy(robotsEnabled = false, hostDelay = 1, maxRounds = 4))
+    // the round-boundary counter hook, fed the JVM's Janino compile count
+    c.roundCounter = () => CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    assert(c.run() == 4)
+    val compiled = c.roundRunMs.toSeq
+    assert(compiled(3) <= 5, s"classes compiled per round: $compiled")
+  }
+
   test("resume from snapshot checkpoint continues identically") {
     val dFull = tempDir("full")
     val dSplit = tempDir("split")
