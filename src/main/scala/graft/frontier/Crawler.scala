@@ -1,6 +1,7 @@
 package graft.frontier
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.core.{Burl, FilterDsl, Robots}
@@ -74,10 +75,10 @@ case class CrawlConfig(
       * (`Sieve.newUrls`); at or above it, the scan-probe
       * (`Sieve.newUrlsScanProbe`). Both are exact. Kept as a crossover
       * because forcing the scan-probe on every round measured slower on
-      * crawls whose seen set stays below it (seen sizes 400 to ~45k; the
-      * side above 50k has no measurement, and the value was not
-      * re-measured when the seen-bloom bank was deleted); Long.MaxValue
-      * keeps the plain anti-join throughout */
+      * crawls whose seen set stays below it (crawl_wide, seen 400 to ~45k
+      * read from disk, no seen-bloom bank: slower in 7 of 8 seeds, median
+      * op wall 22.6 -> 23.6 s); the side above 50k has no measurement.
+      * Long.MaxValue keeps the plain anti-join throughout */
     bloomMinSeen: Long = 50000L,
     ipSpace: Long = 1L << 20,
     /** multi-agent IP-delay attenuation (StartupConfiguration.java:213-226,
@@ -94,13 +95,10 @@ case class CrawlConfig(
     statePartitions: Int = 32,
     /** compact the frontier (drop tombstoned rows) once this many
       * tombstones accumulate (WorkbenchVirtualizer.java:132-143 GC analog).
-      * Between compactions every round's selection broadcasts the whole
-      * tombstone set (the pending-frontier anti-join, which compaction
-      * reuses), so this also bounds that broadcast */
+      * Between compactions every round re-checkpoints the whole tombstone
+      * set and its selection broadcasts it (the pending-frontier anti-join,
+      * which compaction reuses), so this also bounds both */
     tombstoneCompactRows: Long = 2L << 20,
-    /** fold the lazy tombstone-delta union chain once it has this many
-      * parts (plan-size hygiene between compactions) */
-    tombstoneFoldParts: Int = 32,
     /** storage level for in-memory state blocks between snapshots */
     stateStorage: String = "MEMORY_AND_DISK")
 
@@ -150,9 +148,12 @@ case class FetchUnit(
   *   seen/round=N, docs/round=N, digests/round=N,
   *   trace/round=N, metrics/round=N                      (append-only)
   * }}}
-  * Between snapshots the state tables are threaded in memory
-  * (`localCheckpoint` truncates lineage); `run()` resumes from the last
-  * complete snapshot and deterministically re-executes rounds after it.
+  * Between snapshots the frontier (a union of checkpointed deltas), hosts,
+  * ips and tombstones are threaded in memory (`localCheckpoint` truncates
+  * lineage); seen and digests are always read back from their append-only
+  * tables, so in-memory and resumed rounds plan alike. `run()` resumes
+  * from the last complete snapshot and deterministically re-executes
+  * rounds after it.
   */
 object Crawler {
 
@@ -185,7 +186,6 @@ object Crawler {
     * per-round full-table shuffle). Above the threshold, SMJ. */
   private[graft] def flagDuplicates(pages: DataFrame, digestsSeen: DataFrame,
       probe: Boolean): DataFrame = {
-    import org.apache.spark.sql.functions._
     val firstDigest = pages.groupBy("digest").agg(min("seq").as("__minSeq"))
     val withBatch = pages
       .join(firstDigest, Seq("digest"))
@@ -245,7 +245,7 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
   //  - codegen class names without the stage id: round-varying scalars are
   //    plan references (ref_long), so a steady round's sources repeat the
   //    previous round's — but whole-stage class names embed the stage id,
-  //    which shifts as the frontier/seen/tombstone unions grow, so the
+  //    which shifts as the frontier union grows, so the
   //    sources only hit the codegen cache once the id is left out;
   //  - bloom_agg (the fused filter builds) is clamped by the runtime-filter
   //    size caps (default 4M items / 67M bits — far below a large round's
@@ -340,20 +340,34 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
 
   /** Pending deletions of the append-only frontier: fetched/dropped rows
     * are tombstoned by hash and physically removed only at
-    * compaction/snapshot. `set` is a lazy union of per-round lc'd deltas
-    * (`parts` of them — folded when the chain gets long); only deltas are
-    * ever re-materialized, never the accumulated set. */
-  private case class Tombstones(set: DataFrame, rows: Long, parts: Int)
-  private def noTombstones = Tombstones(Seq.empty[Long].toDF("urlHash"), 0L, 0)
+    * compaction/snapshot. `set` is ONE checkpointed block of `rows`
+    * hashes, rebuilt with each round's delta and coalesced to
+    * `statePartitions` (a union's partition counts add up). */
+  private case class Tombstones(set: DataFrame, rows: Long)
+  private def noTombstones = Tombstones(Seq.empty[Long].toDF("urlHash"), 0L)
+
+  private def withTombstones(tombs: Tombstones, delta: DataFrame): Tombstones = {
+    val set = lc(tombs.set.unionByName(delta).coalesce(cfg.statePartitions))
+    Tombstones(set, set.count())
+  }
 
   /** In-memory state threaded between rounds (lineage truncated via
     * localCheckpoint); rebuilt from the last parquet snapshot on resume. */
   private case class LiveState(round: Int, maxSeq: Long, frontSize: Long,
       frontier: DataFrame, hosts: DataFrame, ips: DataFrame,
-      seen: DataFrame, digests: DataFrame, tombs: Tombstones, pendingRows: Long) {
+      tombs: Tombstones, pendingRows: Long) {
     def pending: DataFrame = Crawler.pendingFrontier(frontier, tombs.set, tombs.rows)
+    def frames: Seq[DataFrame] = Seq(frontier, hosts, ips, tombs.set)
   }
   private var live: Option[LiveState] = None
+
+  /** The RDDs behind `frames`' checkpoints: `Dataset.unpersist` does not
+    * free a `localCheckpoint`'s blocks, unpersisting its `LogicalRDD`'s
+    * RDD does. `release` frees frames that nothing reads any more. */
+  private def checkpointRdds(frames: Seq[DataFrame]) =
+    frames.flatMap(_.queryExecution.logical.collect { case r: LogicalRDD => r.rdd })
+  private def release(frames: DataFrame*): Unit =
+    checkpointRdds(frames).foreach(_.unpersist(blocking = false))
 
   // ---------------- initialization (round 0) ----------------
 
@@ -369,30 +383,27 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
       .withColumn("urlHash", murmur64(col("url")))
       .select("url", "urlHash", "parentSeq", "linkIdx")
 
-    val emptySeen = spark.emptyDataset[Long].toDF("urlHash")
+    val order = Seq("parentSeq", "linkIdx")
     val parts = math.max(1, cfg.statePartitions)
+    // nothing is seen yet: the sieve is the within-batch first-wins dedup
+    val batch = lc(Ranking.firstPerKey(candidates, "urlHash", order))
     // the rank pass's bucket counts are the frontier's row count
-    val (newUrls, maxSeq) = Sieve.assignSeq(
-      Sieve.newUrls(candidates, emptySeen, Seq("parentSeq", "linkIdx")).transform(lc),
-      Seq("parentSeq", "linkIdx"), startSeq = -1L, // seqs from 0
+    val (newUrls, maxSeq) = Sieve.assignSeq(batch, order, startSeq = -1L, // seqs from 0
       Sieve.linearBuckets(col("linkIdx"), 0, cfg.nSeeds - 1L, parts * 8))
 
     val frontier = toFrontier(newUrls).transform(lc)
-    val seen = frontier.select("urlHash")
+    release(batch)
     var hosts: DataFrame = null
     var ips: DataFrame = null
     inParallel(
-      () => seen.write.options(graft.util.FastLocalFs.writeOptions).mode(SaveMode.Overwrite).parquet(appendDir("seen", 0)),
-      () => hosts = newHostsFrom(frontier, emptyHosts).transform(lc),
-      () => ips = newIpsFrom(frontier, emptyIps).transform(lc))
+      () => frontier.select("urlHash")
+        .write.options(graft.util.FastLocalFs.writeOptions).mode(SaveMode.Overwrite).parquet(appendDir("seen", 0)),
+      () => hosts = newHostsFrom(frontier, spark.emptyDataset[HostState].toDF).transform(lc),
+      () => ips = newIpsFrom(frontier, spark.emptyDataset[IpState].toDF).transform(lc))
     writeState(0, frontier, hosts, ips, maxSeq, cfg.initialFrontSize)
     live = Some(LiveState(0, maxSeq, cfg.initialFrontSize, frontier, hosts, ips,
-      seen, emptyDigests, noTombstones, pendingRows = maxSeq))
+      noTombstones, pendingRows = maxSeq))
   }
-
-  private def emptyHosts = spark.emptyDataset[HostState].toDF
-  private def emptyIps = spark.emptyDataset[IpState].toDF
-  private def emptyDigests = Seq.empty[String].toDF("digest")
 
   /** Narrow frontier row: url + three hashes + seq. `seq` is the global
     * first-enqueue order (the sieve's output order, reference
@@ -449,16 +460,16 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
   }
 
   /** Append-only tables are round=N partition dirs: one partition-
-    * discovering scan with pruning, not a union of per-round reads. */
+    * discovering scan with pruning, not a union of per-round reads. The
+    * schema is given, so a read launches no schema-inference job. */
   private def readSeen(uptoRound: Int): DataFrame =
-    spark.read.parquet(s"$workDir/seen")
+    spark.read.schema("urlHash BIGINT, round INT").parquet(s"$workDir/seen")
       .where(col("round") <= uptoRound).select("urlHash")
 
-  private def readDigests(uptoRound: Int): DataFrame = {
-    if (!exists(s"$workDir/digests")) emptyDigests
-    else spark.read.parquet(s"$workDir/digests")
+  private def readDigests(uptoRound: Int): DataFrame =
+    if (!exists(s"$workDir/digests")) Seq.empty[String].toDF("digest")
+    else spark.read.schema("digest STRING, round INT").parquet(s"$workDir/digests")
       .where(col("round") <= uptoRound).select("digest")
-  }
 
   private def loadState(round: Int): LiveState = {
     val sc = spark.read.parquet(stateDir(round, "scalars")).collect()(0)
@@ -468,7 +479,6 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
     LiveState(round, maxSeq, frontSize, frontier,
       spark.read.parquet(stateDir(round, "hosts")),
       spark.read.parquet(stateDir(round, "ips")),
-      readSeen(round), readDigests(round),
       noTombstones, pendingRows = frontier.count())
   }
 
@@ -514,7 +524,7 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
       return 0
     }
 
-    val (linkSources, docs, newDigests) = store(gates(f.rows), st.digests, f.count)
+    val (linkSources, docs) = store(gates(f.rows), round, f.count)
     val links = parseLinks(linkSources)
     val hostsU = hostTransition(
       if (windowGatesActive) advanceWindowOnly(st.hosts, sel.windowOnlyHosts, round)
@@ -533,14 +543,10 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
       // (the trace sink already ran — it doubles as the fetch-cache
       // materialization job, with the round scalars observed on it)
       () => if (cfg.storeDocs) writeRobots(f.rows, round),
-      () => if (cfg.storeDocs) duplicates = writeDocs(docs, newDigests, round),
+      () => if (cfg.storeDocs) duplicates = writeDocs(docs, round),
       // materializes the hostsU cache (+ hostAgg broadcast) through the
-      // dropped-URL leg; only the per-round delta (∝ burst) is
-      // materialized, the accumulated set stays a lazy union
-      () => {
-        val delta = lc(tombstoneDelta)
-        tombs = foldTombstones(st.tombs, delta, delta.count())
-      }))
+      // dropped-URL leg
+      () => tombs = withTombstones(st.tombs, tombstoneDelta)))
 
     val dedupOut =
       if (cfg.maxUrlsPerHost == Long.MaxValue) sv.count else sv.newDelta.count()
@@ -555,13 +561,11 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
     val frontActive = st.frontSize < Long.MaxValue
     var hostsMem = hostsNext
     var ipsMem = ipsNext
-    var digestsLc: DataFrame = null
     var selHosts = 0L
     inParallel(
       () => metrics.write.options(graft.util.FastLocalFs.writeOptions).mode(SaveMode.Overwrite).parquet(appendDir("metrics", round)),
       () => if (!snap) hostsMem = hostsNext.transform(lc),
       () => if (!snap) ipsMem = ipsNext.transform(lc),
-      () => if (cfg.storeDocs) digestsLc = newDigests.transform(lc),
       () => if (frontActive) selHosts = f.rows.select("hostHash").distinct().count())
 
     // adaptive front growth: a saturated round multiplies the cap
@@ -573,13 +577,12 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
       }
     commit(LiveState(round, st.maxSeq + sv.count, frontSizeNext,
       st.frontier.unionByName(sv.newDelta), hostsMem, ipsMem,
-      st.seen.unionByName(sv.input.select("urlHash")),
-      if (cfg.storeDocs) st.digests.unionByName(digestsLc) else st.digests,
       tombs, st.pendingRows + dedupOut - (tombs.rows - st.tombs.rows)), snap)
 
     f.cached.unpersist(); sel.selected.unpersist()
     links.unpersist(); hostsU.unpersist()
     if (cfg.storeDocs) docs.unpersist()
+    release(sv.input)
     f.count
   }
 
@@ -802,15 +805,14 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
     * appended. */
   private def commitZeroFetch(st: LiveState, round: Int, sel: Selection): Unit = {
     val snap = snapshotDue(round)
-    val dropped = if (windowGatesActive) sel.disallowed.transform(lc) else null
-    val droppedRows = if (dropped == null) 0L else dropped.count()
-    if (droppedRows == 0) commit(st.copy(round = round), snap)
+    val tombs = if (windowGatesActive) withTombstones(st.tombs, sel.disallowed) else st.tombs
+    val droppedRows = tombs.rows - st.tombs.rows
+    if (droppedRows == 0) commit(st.copy(round = round, tombs = tombs), snap)
     else {
       val hosts = advanceWindowOnly(st.hosts, sel.windowOnlyHosts, round)
       commit(st.copy(round = round,
         hosts = if (snap) hosts else hosts.transform(lc),
-        tombs = foldTombstones(st.tombs, dropped, droppedRows),
-        pendingRows = st.pendingRows - droppedRows), snap)
+        tombs = tombs, pendingRows = st.pendingRows - droppedRows), snap)
     }
   }
 
@@ -837,19 +839,18 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
           .otherwise(lit(null).cast("array<string>")))
   }
 
-  /** Store side: digest-keyed exact duplicate detection. Digests cover ALL
-    * parsed pages; the store filter gates only the sink. Returns (link
-    * sources, docs — cached when the store is on, new digests). */
-  private def store(pages: DataFrame, digestsSeen: DataFrame,
-      fetchedCount: Long): (DataFrame, DataFrame, DataFrame) =
-    if (!cfg.storeDocs) (pages, pages.limit(0), emptyDigests)
+  /** Store side: digest-keyed exact duplicate detection against earlier
+    * rounds' digests. Digests cover ALL parsed pages; the store filter gates
+    * only the sink. Returns (link sources, docs — cached when store is on). */
+  private def store(pages: DataFrame, round: Int,
+      fetchedCount: Long): (DataFrame, DataFrame) =
+    if (!cfg.storeDocs) (pages, pages.limit(0))
     else {
       val flagged = Crawler
-        .flagDuplicates(pages, digestsSeen, probe = fetchedCount <= ProbeThreshold)
+        .flagDuplicates(pages, readDigests(round - 1), probe = fetchedCount <= ProbeThreshold)
         .cache()
       // duplicate pages contribute no outlinks (ParsingThread.java:408-410)
-      (flagged.where(!col("is_duplicate")), flagged,
-        flagged.where(!col("is_duplicate")).select("digest").distinct())
+      (flagged.where(!col("is_duplicate")), flagged)
     }
 
   /** Robots store sink (the robots WARC stream, ParsingThread.java:325-327):
@@ -865,7 +866,7 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
     * duplicates telemetry rides the docs write as an observed aggregate
     * BELOW the store filter (all flagged pages flow through the metrics
     * point) — no separate count job over the batch. */
-  private def writeDocs(docs: DataFrame, newDigests: DataFrame, round: Int): Long = {
+  private def writeDocs(docs: DataFrame, round: Int): Long = {
     val dupObs = org.apache.spark.sql.Observation()
     docs
       .observe(dupObs,
@@ -886,7 +887,8 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
           l => burl_host(l) =!= burl_host(col("url"))))
           .as("n_links_ext")) // round = partition dir
       .write.options(graft.util.FastLocalFs.writeOptions).mode(SaveMode.Overwrite).parquet(appendDir("docs", round))
-    newDigests.write.options(graft.util.FastLocalFs.writeOptions).mode(SaveMode.Overwrite).parquet(appendDir("digests", round))
+    docs.where(!col("is_duplicate")).select("digest").distinct()
+      .write.options(graft.util.FastLocalFs.writeOptions).mode(SaveMode.Overwrite).parquet(appendDir("digests", round))
     dupObs.get("dups") match {
       case null => 0L
       case l: java.lang.Long => l.longValue()
@@ -1058,6 +1060,7 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
   private def sieve(st: LiveState, round: Int, links: DataFrame, f: Fetched,
       independent: Seq[() => Unit]): Sieved = {
     val order = Seq("parentSeq", "linkIdx")
+    val seen = readSeen(round - 1)
     var dedupIn = 0L
     var input: DataFrame = null
     var out = 0L
@@ -1074,13 +1077,13 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
           val (c, bb) = Sieve.bloomAggParallel(links, "urlHash",
             math.max(f.linksUpper, 1024L), Sieve.BatchBloomFpp, bloomMergeGroups)
           dedupIn = c
-          input = Sieve.newUrlsScanProbe(links, st.seen, order, lc,
+          input = Sieve.newUrlsScanProbe(links, seen, order, lc,
             broadcastLimit = ProbeThreshold,
             candidateCount = dedupIn, seenCount = st.maxSeq,
             prebuiltBatchBloom = bb)
         } else {
           dedupIn = links.count()
-          input = Sieve.newUrls(links, st.seen, order).transform(lc)
+          input = Sieve.newUrls(links, seen, order).transform(lc)
         }
       },
       dependents = Seq(
@@ -1158,24 +1161,16 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
   private def snapshotDue(round: Int): Boolean =
     cfg.checkpointEvery <= 1 || round % cfg.checkpointEvery == 0
 
-  /** Fold one round's lc'd tombstone delta into the lazy union; once the
-    * chain has `tombstoneFoldParts` parts it is materialized into one
-    * block (plan-size hygiene: politeness-heavy crawls accumulate many
-    * small deltas between compactions). */
-  private def foldTombstones(tombs: Tombstones, delta: DataFrame, deltaRows: Long): Tombstones =
-    if (tombs.parts >= cfg.tombstoneFoldParts)
-      Tombstones(lc(tombs.set.unionByName(delta)), tombs.rows + deltaRows, 1)
-    else Tombstones(tombs.set.unionByName(delta), tombs.rows + deltaRows, tombs.parts + 1)
-
   /** The one commit path of every executed round. `next.frontier` is the
     * append-only table and `next.tombs` its pending deletions. On the
     * snapshot cadence (`snap`) the compacted state tables are written and
     * read back; otherwise the state stays in memory (`next.hosts` and
     * `next.ips` are then already materialized) and the frontier is
     * compacted once `tombstoneCompactRows` tombstones accumulate
-    * (WorkbenchVirtualizer.java:132-143 GC analog). */
+    * (WorkbenchVirtualizer.java:132-143 GC analog). Checkpoint blocks the
+    * committed state no longer reads are released. */
   private def commit(next: LiveState, snap: Boolean): Unit = {
-    live = Some(
+    val committed =
       if (snap) {
         writeState(next.round, next.pending, next.hosts, next.ips, next.maxSeq, next.frontSize)
         next.copy(frontier = spark.read.parquet(stateDir(next.round, "frontier")),
@@ -1189,7 +1184,10 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
         next.copy(
           frontier = next.pending.repartition(cfg.statePartitions * 4, col("hostHash")).transform(lc),
           tombs = noTombstones)
-      else next)
+      else next
+    (checkpointRdds(live.toSeq.flatMap(_.frames) ++ next.frames).toSet --
+      checkpointRdds(committed.frames)).foreach(_.unpersist(blocking = false))
+    live = Some(committed)
   }
 
   /** Force a snapshot of the current live state (used at end of run). */
@@ -1242,6 +1240,8 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
     val ts = System.nanoTime()
     snapshotLive()
     snapshotWall = (System.nanoTime() - ts) / 1e9
+    live.foreach(st => release(st.frames: _*))
+    live = None
     executed
   }
 

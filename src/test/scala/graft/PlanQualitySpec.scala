@@ -197,7 +197,8 @@ class PlanQualitySpec extends AnyFunSuite {
     import spark.implicits._
     val frontier = (1L to 5000L).map(i => (s"u$i", i, i % 37, i % 11, i))
       .toDF("url", "urlHash", "hostHash", "ipHash", "seq").localCheckpoint(true)
-    // the tombstone set as the crawl keeps it: a union of lc'd deltas
+    // a tombstone set of RDD-backed rows (the crawl keeps one checkpointed
+    // set; a union of two plans the same)
     val tombs = (1L to 2500L by 7).toDF("urlHash").localCheckpoint(true)
       .unionByName((2501L to 5000L by 7).toDF("urlHash").localCheckpoint(true))
     val out = graft.frontier.Crawler.pendingFrontier(frontier, tombs, tombs.count())

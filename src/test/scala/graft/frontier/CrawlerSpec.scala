@@ -63,16 +63,15 @@ class CrawlerSpec extends AnyFunSuite {
     assert(collectTrace(c1) == collectTrace(c2))
   }
 
-  test("aggressive compaction + tombstone fold on the scan-probe path preserve the crawl") {
+  test("aggressive compaction on the scan-probe path preserves the crawl") {
     val d1 = tempDir("gcAggressive")
     val d2 = tempDir("gcDefault")
-    // every state-GC path fires constantly, with every round on the
-    // scan-probe sieve: tombstone compaction every ~50 rows, delta-union
-    // fold at 2 parts — all performance-shape knobs, so the crawl must be
-    // byte-identical to the default
+    // in-memory state with tombstone compaction every ~50 rows, and every
+    // round on the scan-probe sieve — performance-shape knobs only, so the
+    // crawl must be byte-identical to the default
     val c1 = new Crawler(spark, d1, cfg.copy(
       bloomMinSeen = 1L,
-      tombstoneCompactRows = 50L, tombstoneFoldParts = 2,
+      tombstoneCompactRows = 50L,
       checkpointEvery = 99, maxRounds = 5))
     val c2 = new Crawler(spark, d2, cfg.copy(maxRounds = 5))
     c1.run(); c2.run()
@@ -91,6 +90,27 @@ class CrawlerSpec extends AnyFunSuite {
     assert(c.run() == 4)
     val compiled = c.roundRunMs.toSeq
     assert(compiled(3) <= 5, s"classes compiled per round: $compiled")
+  }
+
+  test("a crawl releases the blocks it cached: none outlive run(), none pile up across rounds") {
+    val sc = spark.sparkContext
+    def cachedIds = sc.getRDDStorageInfo.map(_.id).toSet
+    // in-memory state between snapshots (frontier union, hosts/ips and
+    // tombstone checkpoints, a politeness-wait round) and the final
+    // forced snapshot
+    val before = cachedIds
+    new Crawler(spark, tempDir("release-mem"), cfg.copy(maxRounds = 5, checkpointEvery = 3)).run()
+    assert((cachedIds -- before).isEmpty, s"blocks left cached: ${cachedIds -- before}")
+    // per-round snapshots: every round reads its state back from parquet,
+    // so the cached-RDD count must not grow once the crawl is under way
+    // (the round-boundary hook records its change across each round)
+    val before1 = cachedIds
+    val c = new Crawler(spark, tempDir("release-snap"), cfg.copy(checkpointEvery = 1))
+    c.roundCounter = () => sc.getRDDStorageInfo.length.toLong
+    assert(c.run() == cfg.maxRounds)
+    val growth = c.roundRunMs.toSeq
+    assert(growth.drop(2).forall(_ <= 0), s"cached RDDs added per round: $growth")
+    assert((cachedIds -- before1).isEmpty, s"blocks left cached: ${cachedIds -- before1}")
   }
 
   test("resume from snapshot checkpoint continues identically") {
