@@ -119,7 +119,7 @@ object Bench {
   }
 
   /** Full JSON string literal (quotes + escape of backslash, quote, and
-    * ALL control chars — same contract as Verify's oracle_sql.json writer):
+    * ALL control chars; Verify's oracle_sql.json writer uses it too):
     * exception messages with newlines must not corrupt the bench line. */
   def jsonStr(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""

@@ -186,31 +186,9 @@ object Dedup {
       planes: Int = 12, minCosine: Double = 0.95,
       maxBucketSize: Int = 1000): DataFrame = {
     val v = emb.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
-    // deterministic pseudo-hyperplanes: sign of sum_i v[i]*w_p[i],
-    // w_p[i] = hash-derived in {-1,1}. For a uniform-dimension corpus the
-    // weights are a driver-computed literal table (the same xxhash64
-    // derivation — Similarity.planeWeights), replacing planes×dim string
-    // hashes per row; ragged corpora keep the per-row adaptive form.
-    def sgnAdaptive(p: Int): Column = {
-      val prods = aggregate(
-        zip_with(col("v"), sequence(lit(0), size(col("v")) - 1),
-          (x, i) => x * (pmod(xxhash64(concat_ws("_", lit(p), i)), lit(2)) * 2 - 1)),
-        lit(0.0), (acc, x) => acc + x)
-      when(prods >= 0, lit(1)).otherwise(lit(0))
-    }
-    def sgnW(p: Int, w: Array[Double]): Column = {
-      val prods = aggregate(zip_with(col("v"), array(w.map(lit): _*), (x, ww) => x * ww),
-        lit(0.0), (acc, x) => acc + x)
-      when(prods >= 0, lit(1)).otherwise(lit(0))
-    }
-    val sigExpr = Similarity.uniformDim(v, "v") match {
-      case Some(dim) =>
-        val w = Similarity.planeWeights(planes, dim)
-        (0 until planes).map(p => sgnW(p, w(p)) * (1 << p)).reduce(_ + _)
-      case None =>
-        (0 until planes).map(p => sgnAdaptive(p) * (1 << p)).reduce(_ + _)
-    }
-    cosinePairsInBuckets(v, sigExpr, minCosine, maxBucketSize)
+    // deterministic pseudo-hyperplanes: sign of sum_i v[i]*w_p[i] with
+    // hash-derived w_p[i] in {-1,1} (the LSH bucket Similarity probes)
+    cosinePairsInBuckets(v, plane_bucket(col("v"), planes), minCosine, maxBucketSize)
   }
 
   /** Embedding near-dup pairs over COORDINATE-SIGN buckets: plane p is

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.{plane_bucket, PlaneBuckets}
+
 /** Similarity search over embedding columns (`array<float>`).
   *
   * Scale notes: brute-force top-k is one scan + TakeOrdered (no shuffle of
@@ -52,52 +54,6 @@ object Similarity {
     math.sqrt(acc)
   }
 
-  /** Driver-side evaluation of the hash-derived hyperplane weight
-    * `pmod(xxhash64(concat_ws("_", p, i)), 2) * 2 - 1` — the same Spark
-    * XxHash64 (seed 42) over the same "p_i" string the per-row expression
-    * hashed, so a literal weight array replaces planes×dim string hashes
-    * PER ROW with one driver-side table (guide §1.2: fix the per-task
-    * work). Weights are ±1.0 doubles, exactly the value the old
-    * `x * (pmod(xxhash64(..)) * 2 - 1)` multiplied by. */
-  private[analytics] def planeWeights(planes: Int, dim: Int): Array[Array[Double]] =
-    Array.tabulate(planes, dim) { (p, i) =>
-      val h = new org.apache.spark.sql.catalyst.expressions.XxHash64(
-        Seq(org.apache.spark.sql.catalyst.expressions.Literal(
-          org.apache.spark.unsafe.types.UTF8String.fromString(s"${p}_$i"),
-          org.apache.spark.sql.types.StringType))).eval(null).asInstanceOf[Long]
-      (java.lang.Math.floorMod(h, 2L) * 2L - 1L).toDouble
-    }
-
-  /** Sign-bucket id from literal weights: same fold order / zero rule as
-    * [[bucketExpr]], applicable when every vector has exactly
-    * `weights(p).length` elements (the [[uniformDim]] probe guards it). */
-  private[analytics] def bucketExprW(vec: Column, weights: Array[Array[Double]]): Column =
-    weights.zipWithIndex.map { case (w, p) =>
-      val prod = aggregate(zip_with(vec, array(w.map(lit): _*), (x, ww) => x * ww),
-        lit(0.0), (acc, x) => acc + x)
-      when(prod >= 0, lit(1L)).otherwise(lit(0L)) * (1L << p)
-    }.reduce(_ + _)
-
-  /** Driver-side twin of one plane's sign under [[bucketExprW]] (same
-    * left-fold), for computing a literal query bucket without a Spark job.
-    * A NaN product gets sign 1: Spark's `>=` orders NaN above every value. */
-  private[analytics] def localBucket(q: Array[Double], weights: Array[Array[Double]]): Long =
-    weights.zipWithIndex.map { case (w, p) =>
-      var acc = 0.0
-      var i = 0
-      while (i < q.length) { acc += q(i) * w(i); i += 1 }
-      (if (acc >= 0 || acc.isNaN) 1L else 0L) * (1L << p)
-    }.sum
-
-  /** The vectors' common dimension, or None when ragged/empty/zero-length
-    * (callers then keep the per-row adaptive expressions). One tiny
-    * aggregation job — repaid many times over by the literal-weight path. */
-  private[analytics] def uniformDim(v: DataFrame, vecCol: String): Option[Int] = {
-    val r = v.agg(min(size(col(vecCol))).as("mn"), max(size(col(vecCol))).as("mx")).head()
-    if (r.isNullAt(0) || r.isNullAt(1) || r.getInt(0) != r.getInt(1) || r.getInt(0) <= 0) None
-    else Some(r.getInt(0))
-  }
-
   /** One corpus scan + TakeOrdered(k) against a literal query: the shared
     * tail of every ANN probe. The corpus norm is evaluated in its own
     * projection (once per row — CollapseProject will not inline a non-cheap
@@ -129,43 +85,13 @@ object Similarity {
   def lshTopK(emb: DataFrame, idCol: String, vecCol: String,
       query: Array[Double], k: Int, planes: Int = 8): DataFrame = {
     val v = emb.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
-    // literal ±1 weights when the corpus dimension is uniform (the normal
-    // case): replaces planes×dim string hashes PER ROW — for the corpus
-    // bucket AND the query bucket, which Catalyst re-evaluated per row
-    // despite being constant (r06 plan audit) — with small zip_with folds
-    // and a driver-computed literal. Ragged corpora keep the old per-row
-    // adaptive expressions (identical results either way).
-    val (bucketCol, qBucket) = uniformDim(v, "v") match {
-      case Some(dim) =>
-        // weight(p, i) depends only on (p, i), so the query bucket uses a
-        // table sized by the QUERY's own length — same values as the old
-        // bucketExpr over the query's indices even if query and corpus
-        // dimensions disagree
-        (bucketExprW(col("v"), planeWeights(planes, dim)),
-          lit(localBucket(query, planeWeights(planes, query.length))))
-      case None =>
-        val q = array(query.map(lit): _*)
-        (bucketExpr(col("v"), planes), bucketExpr(q, planes))
-    }
-    val bucketed = v.withColumn("bucket", bucketCol)
+    // the query's bucket is a literal computed on the driver by the same
+    // kernel that buckets the corpus rows
+    val qBucket = lit(PlaneBuckets.bucket(query, planes))
     cosineTopK(
-      bucketed
-        .where(bit_count(col("bucket").bitwiseXOR(qBucket)) <= 1) // probe ball r=1
-        .select(col("id"), col("v")),
+      v.where(bit_count(plane_bucket(col("v"), planes).bitwiseXOR(qBucket)) <= 1), // probe ball r=1
       query, k)
   }
-
-  private def planeSignExpr(vec: Column, p: Int): Column = {
-    val prod = aggregate(
-      zip_with(vec, sequence(lit(0), size(vec) - 1),
-        (x, i) => x * (pmod(xxhash64(concat_ws("_", lit(p), i)), lit(2)) * 2 - 1)),
-      lit(0.0), (acc, x) => acc + x)
-    when(prod >= 0, lit(1L)).otherwise(lit(0L))
-  }
-
-  /** Sign-bucket id of an embedding column. */
-  def bucketExpr(vec: Column, planes: Int): Column =
-    (0 until planes).map(p => planeSignExpr(vec, p) * (1L << p)).reduce(_ + _)
 
   /** Write the corpus PARTITIONED BY LSH bucket: the layout that makes
     * [[lshTopKBucketed]]'s probe a partition-PRUNED read (only the probe
@@ -175,15 +101,11 @@ object Similarity {
   def writeBucketed(emb: DataFrame, idCol: String, vecCol: String,
       path: String, planes: Int = 8): Unit = {
     val v = emb.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
-    val bucketCol = uniformDim(v, "v") match {
-      case Some(dim) => bucketExprW(col("v"), planeWeights(planes, dim))
-      case None => bucketExpr(col("v"), planes)
-    }
     // repartition by the partition column: each bucket's rows land in one
     // task, so the 2^planes directory files are written in parallel instead
     // of one task sequentially opening every bucket's writer (guide §6
     // output-layout note; same rows per directory, so reads are unchanged)
-    v.withColumn("bucket", bucketCol)
+    v.withColumn("bucket", plane_bucket(col("v"), planes))
       .repartition(col("bucket"))
       .write.partitionBy("bucket")
       .options(graft.util.FastLocalFs.writeOptions) // no chmod fork per file
@@ -196,10 +118,9 @@ object Similarity {
     * Same result set as [[lshTopK]] with the same planes/ball. */
   def lshTopKBucketed(spark: org.apache.spark.sql.SparkSession, path: String,
       query: Array[Double], k: Int, planes: Int = 8, hammingBall: Int = 1): DataFrame = {
-    // the query's bucket is a literal: evaluate it on the driver (the
-    // localBucket fold is the exact arithmetic of the bucket expression,
-    // so no Spark job is needed for it)
-    val qBucket = localBucket(query, planeWeights(planes, query.length))
+    // the query's bucket is a literal: the driver evaluates it with the
+    // kernel behind the corpus bucket column, so no Spark job is needed
+    val qBucket = PlaneBuckets.bucket(query, planes)
     // enumerate the probe ball as explicit partition values -> pruning is
     // a static IN-list over the partition column
     val ball = (0L until (1L << planes))

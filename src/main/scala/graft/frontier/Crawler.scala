@@ -1,7 +1,6 @@
 package graft.frontier
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.core.{Burl, FilterDsl, Robots}
@@ -361,14 +360,6 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
   }
   private var live: Option[LiveState] = None
 
-  /** The RDDs behind `frames`' checkpoints: `Dataset.unpersist` does not
-    * free a `localCheckpoint`'s blocks, unpersisting its `LogicalRDD`'s
-    * RDD does. `release` frees frames that nothing reads any more. */
-  private def checkpointRdds(frames: Seq[DataFrame]) =
-    frames.flatMap(_.queryExecution.logical.collect { case r: LogicalRDD => r.rdd })
-  private def release(frames: DataFrame*): Unit =
-    checkpointRdds(frames).foreach(_.unpersist(blocking = false))
-
   // ---------------- initialization (round 0) ----------------
 
   /** Seed the crawl: normalize seeds, sieve them (dedup), write round-0 state. */
@@ -392,7 +383,7 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
       Sieve.linearBuckets(col("linkIdx"), 0, cfg.nSeeds - 1L, parts * 8))
 
     val frontier = toFrontier(newUrls).transform(lc)
-    release(batch)
+    Checkpoints.release(Seq(batch))
     var hosts: DataFrame = null
     var ips: DataFrame = null
     inParallel(
@@ -582,7 +573,7 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
     f.cached.unpersist(); sel.selected.unpersist()
     links.unpersist(); hostsU.unpersist()
     if (cfg.storeDocs) docs.unpersist()
-    release(sv.input)
+    Checkpoints.release(Seq(sv.input))
     f.count
   }
 
@@ -1185,8 +1176,7 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
           frontier = next.pending.repartition(cfg.statePartitions * 4, col("hostHash")).transform(lc),
           tombs = noTombstones)
       else next
-    (checkpointRdds(live.toSeq.flatMap(_.frames) ++ next.frames).toSet --
-      checkpointRdds(committed.frames)).foreach(_.unpersist(blocking = false))
+    Checkpoints.release(live.toSeq.flatMap(_.frames) ++ next.frames, kept = committed.frames)
     live = Some(committed)
   }
 
@@ -1240,7 +1230,7 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
     val ts = System.nanoTime()
     snapshotLive()
     snapshotWall = (System.nanoTime() - ts) / 1e9
-    live.foreach(st => release(st.frames: _*))
+    live.foreach(st => Checkpoints.release(st.frames))
     live = None
     executed
   }

@@ -75,8 +75,8 @@ object Sieve {
     * flush, work ∝ batch. Returns the new-URL batch MATERIALIZED via `mat`
     * (callers pass localCheckpoint), so the output is safe for the
     * order-sensitive rank pass and is scanned — not recomputed — by its
-    * several consumers. The broadcast batch bloom is released from the
-    * executors once `mat` has returned.
+    * several consumers. The broadcast batch bloom and the materialized
+    * `present` set are released once `mat` has returned.
     */
   def newUrlsScanProbe(
       candidates: DataFrame,
@@ -131,17 +131,20 @@ object Sieve {
       if (presentUpper <= broadcastLimit)
         return mat(deduped.join(broadcast(presentPlan), Seq("urlHash"), "left_anti"))
       val present = mat(presentPlan)
-      val presentCount = present.count()
-      if (presentCount == 0) return mat(deduped)
-      if (presentCount <= broadcastLimit)
-        // ONE materialization of the batch: dedup feeds the broadcast
-        // anti-join directly (a hash-set probe per row costs what the bloom
-        // probe did, and replaces it)
-        mat(deduped.join(broadcast(present), Seq("urlHash"), "left_anti"))
-      else
-        // oversized present set (a mostly-already-seen batch): a shuffle
-        // join against `present`, never against the full seen store
-        mat(deduped.join(present, Seq("urlHash"), "left_anti"))
+      try {
+        val presentCount = present.count()
+        if (presentCount == 0) mat(deduped)
+        else if (presentCount <= broadcastLimit)
+          // ONE materialization of the batch: dedup feeds the broadcast
+          // anti-join directly (a hash-set probe per row costs what the
+          // bloom probe did, and replaces it)
+          mat(deduped.join(broadcast(present), Seq("urlHash"), "left_anti"))
+        else
+          // oversized present set (a mostly-already-seen batch): a shuffle
+          // join against `present`, never against the full seen store
+          mat(deduped.join(present, Seq("urlHash"), "left_anti"))
+      } finally // the materialized output no longer reads what `mat` made
+        Checkpoints.release(Seq(present), kept = Seq(presentPlan))
     } finally bb.unpersist(blocking = false)
   }
 

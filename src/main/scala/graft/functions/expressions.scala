@@ -1,7 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, UnaryExpression,
+  UnsafeArrayData, XxHash64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -16,7 +17,8 @@ import graft.core.{Burl, DuplicateSegments, MurmurHash3Bubing, Robots}
   * `BurlPart`, `DuplicateSegmentsLT`, `LowerRoot`, `IpOfHost`) are
   * whole-stage-codegen'd as static calls into `graft.core`: they run on
   * every outlink of every round, where a `CodegenFallback` would evaluate
-  * its whole argument subtree interpretively, once per reference. The
+  * its whole argument subtree interpretively, once per reference.
+  * `PlaneBucket` is codegen'd the same way, into [[PlaneBuckets]]. The
   * robots, digest and near-dup expressions use interpreted eval
   * (`CodegenFallback`).
   */
@@ -175,6 +177,72 @@ case class IpOfHost(child: Expression, space: Long) extends UnaryExpression {
     defineCodeGen(ctx, ev, c => s"graft.core.Burl.ipOfHost($c.toString(), ${space}L)")
   override protected def withNewChildInternal(newChild: Expression): IpOfHost = copy(child = newChild)
   override def prettyName: String = "ip_of_host"
+}
+
+/** Random-hyperplane LSH bucket of an `array<double>` (bit p = sign of
+  * the vector's dot product with plane p's ±1 weights), whole-stage-
+  * codegen'd as one static call into [[PlaneBuckets]]. Never null: a null
+  * vector buckets to 0, like a null plane sum. */
+case class PlaneBucket(child: Expression, planes: Int) extends UnaryExpression {
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = false
+  override def eval(input: InternalRow): Any =
+    PlaneBuckets.bucket(child.eval(input).asInstanceOf[ArrayData], planes)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""${c.code}
+      |final long ${ev.value} = ${c.isNull} ? 0L :
+      |  graft.functions.PlaneBuckets.bucket(${c.value}, $planes);""".stripMargin,
+      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
+  }
+  override protected def withNewChildInternal(newChild: Expression): PlaneBucket = copy(child = newChild)
+  override def prettyName: String = "plane_bucket"
+}
+
+/** The one plane-bucket kernel, shared by interpreted eval, generated code
+  * and driver-side callers (a query vector's bucket). It reproduces the
+  * SQL formula `Σ_p (aggregate(zip_with(v, sequence(0, size(v) - 1),
+  * (x, i) -> x * w(p, i)), 0.0, +) >= 0 ? 1 : 0) << p` bit for bit, edge
+  * cases included. */
+object PlaneBuckets {
+  private val tables = new java.util.concurrent.ConcurrentHashMap[java.lang.Long, Array[Array[Double]]]()
+
+  /** The ±1 weights w(p, i) = `pmod(xxhash64("p_i"), 2) * 2 - 1` (Spark
+    * XxHash64, seed 42) for `planes` × `dim`, computed once per JVM. */
+  private def weights(planes: Int, dim: Int): Array[Array[Double]] =
+    tables.computeIfAbsent(java.lang.Long.valueOf((planes.toLong << 32) | dim), _ =>
+      Array.tabulate(planes, dim) { (p, i) =>
+        val h = XxHash64(Seq(Literal(s"${p}_$i")), 42L).eval().asInstanceOf[Long]
+        (java.lang.Math.floorMod(h, 2L) * 2L - 1L).toDouble
+      })
+
+  /** Bit p is 1 when the left fold `Σ v[i] * w(p, i)` from 0.0 is >= 0 or
+    * NaN (Spark's `>=` orders NaN above every value). A null or empty
+    * vector, or one with a null element, is 0: the formula's plane sums
+    * are all null then (`sequence(0, -1)` has two entries, so the zip of
+    * an empty vector pads it with nulls). */
+  def bucket(v: ArrayData, planes: Int): Long = {
+    val n = if (v == null) 0 else v.numElements()
+    if (n == 0) return 0L
+    var i = 0
+    while (i < n) { if (v.isNullAt(i)) return 0L; i += 1 }
+    val w = weights(planes, n)
+    var b = 0L
+    var p = 0
+    while (p < planes) {
+      val wp = w(p)
+      var acc = 0.0
+      i = 0
+      while (i < n) { acc += v.getDouble(i) * wp(i); i += 1 }
+      if (acc >= 0 || acc.isNaN) b |= 1L << p
+      p += 1
+    }
+    b
+  }
+
+  /** The bucket of a driver-side vector, such as an ANN query. */
+  def bucket(v: Array[Double], planes: Int): Long =
+    bucket(UnsafeArrayData.fromPrimitiveArray(v), planes)
 }
 
 /** robots.txt check: true iff pathQuery is allowed by the sorted prefix-free

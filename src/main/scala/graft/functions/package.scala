@@ -39,6 +39,11 @@ package object functions {
   /** Deterministic synthetic DNS: host -> ip id in [0, space). */
   def ip_of_host(c: Column, space: Long = 1L << 20): Column = mkCol(IpOfHost(toExpr(c), space))
 
+  /** Random-hyperplane LSH bucket of a numeric array over `planes`
+    * hash-derived ±1 planes (see [[PlaneBuckets]]). */
+  def plane_bucket(v: Column, planes: Int): Column =
+    mkCol(PlaneBucket(toExpr(v.cast("array<double>")), planes))
+
   /** True iff pathQuery passes the robots disallow-prefix filter. */
   def respects_robots(pathQuery: Column, prefixes: Column): Column =
     mkCol(RespectsRobots(toExpr(pathQuery), toExpr(prefixes)))

@@ -1,11 +1,12 @@
 package graft.analytics
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Focused equivalence tests for the r06 optimization internals: the
-  * literal-weight hyperplane buckets, the precomputed-norm cosine, and
+  * hyperplane bucket kernel, the precomputed-norm cosine, and
   * the no-fork local filesystem must all be BIT-identical / semantically
   * identical to the formulations they replaced (the driver's oracle gate
   * depends on exact doubles). */
@@ -24,33 +25,84 @@ class OptimizedInternalsSpec extends AnyFunSuite {
       .toDF("id", "v")
   }
 
-  test("literal plane weights reproduce the per-row hash-derived bucket exactly") {
-    val v = randVecs(100, 9, 11)
-    val planes = 5
-    val viaHash = v.select(col("id"),
-      Similarity.bucketExpr(col("v"), planes).as("b")).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val w = Similarity.planeWeights(planes, 9)
-    val viaWeights = v.select(col("id"),
-      Similarity.bucketExprW(col("v"), w).as("b")).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaHash == viaWeights)
+  /** The per-row SQL bucket formula `plane_bucket` replaced, kept as the
+    * reference: plane p's weight for index i is pmod(xxhash64("p_i"), 2)*2-1. */
+  private def refBucket(vec: Column, planes: Int): Column =
+    (0 until planes).map { p =>
+      val prod = aggregate(
+        zip_with(vec, sequence(lit(0), size(vec) - 1),
+          (x, i) => x * (pmod(xxhash64(concat_ws("_", lit(p), i)), lit(2)) * 2 - 1)),
+        lit(0.0), (acc, x) => acc + x)
+      when(prod >= 0, lit(1L)).otherwise(lit(0L)) * (1L << p)
+    }.reduce(_ + _)
+
+  /** plane_bucket evaluated in Spark (generated code, then interpreted
+    * eval) and by the driver-side kernel, each against [[refBucket]]. */
+  private def checkAgainstRef(vecs: Seq[Seq[java.lang.Double]], planes: Int): Seq[Long] = {
+    import graft.functions.{plane_bucket, PlaneBuckets}
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("id", IntegerType),
+      StructField("v", ArrayType(DoubleType, containsNull = true))))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(
+      vecs.zipWithIndex.map { case (v, i) => Row(i, v) }, 2), schema)
+    def evalIn(conf: Map[String, String]): Map[Int, (Long, Long)] = {
+      val old = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        // separate from the reference: a projection holding the formula's
+        // CodegenFallback expressions is not whole-stage codegen'd
+        val q = df.select(col("id"), plane_bucket(col("v"), planes))
+        val wscg = q.queryExecution.executedPlan.collect {
+          case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w.toString }
+        assert(wscg.exists(_.contains("plane_bucket")) == conf.isEmpty, wscg)
+        val ref = df.select(col("id"), refBucket(col("v"), planes)).collect()
+          .map(r => r.getInt(0) -> r.getLong(1)).toMap
+        q.collect().map(r => r.getInt(0) -> (r.getLong(1), ref(r.getInt(0)))).toMap
+      } finally old.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    val codegen = evalIn(Map.empty)
+    val interpreted = evalIn(Map("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+    vecs.indices.map { i =>
+      val (got, ref) = codegen(i)
+      val v = vecs(i)
+      val driver = PlaneBuckets.bucket(
+        if (v == null) null else new GenericArrayData(v.toArray[Any]), planes)
+      assert(got == ref && interpreted(i) == (ref, ref) && driver == ref,
+        s"${String.valueOf(v)}: codegen $got, interpreted ${interpreted(i)._1}, driver $driver, formula $ref")
+      if (v != null && !v.contains(null))
+        assert(PlaneBuckets.bucket(v.map(_.doubleValue).toArray, planes) == ref)
+      ref
+    }
   }
 
-  test("driver-side localBucket matches the Spark-evaluated bucket of the same vector") {
-    val rnd = new scala.util.Random(13)
-    val q = Array.fill(7)(rnd.nextGaussian())
-    // a NaN component makes every plane product NaN, which Spark's `>=`
-    // orders above zero
-    val qNaN = q.updated(3, Double.NaN)
-    val planes = 6
-    val w = Similarity.planeWeights(planes, 7)
-    Seq(q, qNaN).foreach { v =>
-      val sparkBucket = spark.range(1)
-        .select(Similarity.bucketExpr(array(v.map(lit): _*), planes).as("b"))
-        .head().getLong(0)
-      assert(Similarity.localBucket(v, w) == sparkBucket, v.mkString(","))
-    }
+  test("plane_bucket equals the per-row formula on random vectors of mixed dimension") {
+    val rnd = new scala.util.Random(11)
+    val vecs = Seq.fill(120)(Seq.fill(1 + rnd.nextInt(12))(
+      java.lang.Double.valueOf(rnd.nextGaussian())))
+    val buckets = checkAgainstRef(vecs, planes = 8)
+    assert(buckets.distinct.size > 16) // the planes split the vectors
+  }
+
+  test("plane_bucket equals the per-row formula on degenerate vectors") {
+    def d(xs: Double*): Seq[java.lang.Double] = xs.map(java.lang.Double.valueOf)
+    val nan = Double.NaN
+    val inf = Double.PositiveInfinity
+    val cases = Seq(
+      d(), // sequence(0, -1) has two entries: the zip pads with nulls
+      null,
+      Seq[java.lang.Double](1.0, null, 2.0),
+      d(1.0, nan, 2.0),
+      d(0.0, 0.0, 0.0),
+      d(1.0),
+      d(inf), d(-inf), d(inf, -inf), d(1.0, -inf, 3.0))
+    val buckets = checkAgainstRef(cases, planes = 4)
+    // the formula's values, measured with Spark 4.1 (ANSI on)
+    assert(buckets.take(6) == Seq(0L, 0L, 0L, 15L, 15L, 15L))
   }
 
   test("lshTopK with a query longer than the corpus dimension still completes") {

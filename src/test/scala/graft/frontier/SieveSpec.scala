@@ -82,6 +82,28 @@ class SieveSpec extends AnyFunSuite {
     assert(probe(10L, -1L) == exact, "oversized-present fallback")
   }
 
+  test("the scan-probe sieve keeps no cached block but its output's") {
+    import spark.implicits._
+    val seen = (0 until 200).map(i => MurmurHash3Bubing.hashString("s" + i)).toDF("urlHash")
+    val rnd = new scala.util.Random(13)
+    val mixed = Vector.fill(400)(if (rnd.nextBoolean()) "s" + rnd.nextInt(300) else "n" + rnd.nextInt(150))
+    val b = batch(mixed, 0)
+    def cached = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    // an unknown seen count materializes `present`: the broadcast-present
+    // path, then the oversized-present fallback
+    Seq(1L << 20, 10L).foreach { limit =>
+      val before = cached
+      val out = Sieve.newUrlsScanProbe(b, seen, Seq("parentSeq", "linkIdx"),
+        mat = _.localCheckpoint(true), broadcastLimit = limit,
+        candidateCount = mixed.size.toLong, seenCount = -1L)
+      val outRdds = Checkpoints.rdds(Seq(out)).map(_.id).toSet
+      // (an earlier test's blocks may be cleaned meanwhile, so compare
+      // what the call added)
+      assert(outRdds.size == 1 && cached -- before == outRdds, s"broadcast limit $limit")
+      Checkpoints.release(Seq(out))
+    }
+  }
+
   test("bloom_agg builds a filter with stat.bloomFilter membership semantics") {
     import graft.functions.{bloom_agg, bloom_from_bytes}
     import org.apache.spark.sql.functions.{col, count, lit}
