@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.analytics.{Dedup, Multimodal, Similarity, TextStats}
 import graft.core.FilterDsl
+import graft.frontier.Sieve
 import graft.functions._
 
 /** Driver contract — one `queries` entry per implemented operator
@@ -58,11 +59,18 @@ object SparkEntry {
 
   // ---------------- crawl-semantic operators ----------------
 
-  /** Mercator-sieve semantics: first-seen seq per URL + enqueue rank. */
+  /** Mercator-sieve semantics: first-seen seq per URL + enqueue rank,
+    * ranked like the crawl's sieve ([[graft.frontier.Sieve.assignSeq]]):
+    * monotone buckets over first_seq's range, a per-bucket window plus
+    * bucket offsets — no single-partition global window. */
   private def qSieveFirstSeen(s: SparkSession, dir: String): DataFrame = {
     val firsts = urlStream(s, dir).groupBy("url").agg(min("seq").as("first_seq"))
-    firsts.withColumn("enqueue_rank",
-      row_number().over(Window.orderBy("first_seq")).cast("long"))
+    val r = firsts.agg(min("first_seq"), max("first_seq")).head()
+    def bound(i: Int) = if (r.isNullAt(i)) 0L else r.getAs[Number](i).longValue
+    val (ranked, _) = Sieve.assignSeq(firsts, Seq("first_seq"), startSeq = 0L,
+      Sieve.linearBuckets(col("first_seq"), bound(0), bound(1),
+        s.conf.get("spark.sql.shuffle.partitions").toInt))
+    ranked.withColumnRenamed("seq", "enqueue_rank")
   }
 
   /** Dual politeness: rank-1 per host, then rank-1 per IP (SURVEY §2.5). */

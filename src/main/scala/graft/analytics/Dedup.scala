@@ -19,8 +19,9 @@ import graft.functions._
   *  - verification (exact n-gram Jaccard) runs only on LSH candidates.
   *
   * Materialization note: the candidate-pair builders materialize the
-  * per-doc signature table with `localCheckpoint` (unreplicated
-  * block-manager blocks, lineage truncated) so the self-join + skew-cap
+  * per-doc signature table with a lazy `localCheckpoint` (unreplicated
+  * block-manager blocks, lineage truncated, filled by the first action
+  * rather than when the DataFrame is built) so the self-join + skew-cap
   * + verification joins read it instead of re-deriving the signatures
   * 4-6x. On a long-lived production cluster the same boundary should be
   * a write-out/read-back (or a replicated storage level) so executor
@@ -72,7 +73,8 @@ object Dedup {
     // minhash expression over EVERY doc six times (r06 plan audit: six
     // parquet scans of `documents` in one query).
     val sig = docs.select(col(idCol).as("id"),
-      minhashes(col(textCol), shingleK, numHashes, mod).as("sig")).localCheckpoint()
+      minhashes(col(textCol), shingleK, numHashes, mod).as("sig"))
+      .localCheckpoint(eager = false)
     def bandKey(s: Column): Column =
       if (mod > 0) concat_ws("_", s.cast("array<string>"))
       else xxhash64(s.cast("array<string>"))
@@ -115,7 +117,7 @@ object Dedup {
     // every doc in four scan subtrees, twice per subtree (the join-key
     // isnotnull filter re-derives it); see minhashCandidatePairs
     val sig = docs.select(col(idCol).as("id"), simhash64(col(textCol), mod).as("sh"))
-      .localCheckpoint()
+      .localCheckpoint(eager = false)
     val banded0 = sig.select(col("id"), col("sh"),
       explode(array((0 until 8).map(b =>
         struct(lit(b).as("band"), shiftrightunsigned(col("sh"), b * 8).bitwiseAND(lit(0xffL)).as("key"))): _*)).as("bk"))
@@ -168,7 +170,7 @@ object Dedup {
     // same na*nb operand order as Similarity.cosine).
     val withB = v.withColumn("bucket", bucket)
       .withColumn("nrm", Similarity.normExpr(col("v")))
-      .localCheckpoint()
+      .localCheckpoint(eager = false)
     val sig =
       if (maxBucketSize == Int.MaxValue) withB
       else capBuckets(withB, Seq("bucket"), maxBucketSize)

@@ -72,7 +72,8 @@ case class CrawlConfig(
     storeDocs: Boolean = true,
     /** below this seen size the round sieve uses the plain anti-join
       * (`Sieve.newUrls`); at or above it, the scan-probe
-      * (`Sieve.newUrlsScanProbe`). Both are exact. Kept as a crossover
+      * (`Sieve.newUrlsScanProbe`, one plan whose present-set join AQE
+      * picks at run time). Both are exact. Kept as a crossover
       * because forcing the scan-probe on every round measured slower on
       * crawls whose seen set stays below it (crawl_wide, seen 400 to ~45k
       * read from disk, no seen-bloom bank: slower in 7 of 8 seeds, median
@@ -284,27 +285,6 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
     fs.foreach(Await.result(_, Duration.Inf))
   }
 
-  /** Dependency-driven overlap: run `gate` on the calling thread while the
-    * `independent` actions run concurrently; the moment `gate` completes,
-    * start `dependents` (which consume the gate's output) WITHOUT waiting
-    * for the independent branches. The r4 two-phase barrier made the
-    * rank/seen branches (which need only the sieve output) wait for
-    * the docs sink, host-state, and tombstone branches as well — every
-    * phase tail ran one branch alone while the rest of the executor sat
-    * idle; this removes the barrier that caused it. Output data is
-    * unchanged (branches share only already-materialized caches, and
-    * dependents are submitted by the thread that ran the gate). */
-  private def inParallelStaged(independent: Seq[() => Unit], gate: () => Unit,
-      dependents: Seq[() => Unit]): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext = Crawler.actionPool
-    val indep = independent.map(t => Future(t()))
-    gate()
-    val deps = dependents.map(t => Future(t()))
-    (indep ++ deps).foreach(Await.result(_, Duration.Inf))
-  }
-
   private val fs = org.apache.hadoop.fs.FileSystem.get(
     new java.net.URI(workDir), spark.sparkContext.hadoopConfiguration)
 
@@ -326,8 +306,10 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
     * skips at the queue head */
   private val kHeads = math.max(1, cfg.burst + Crawler.HeadSlack)
 
-  /** candidate batches at or below this size probe the seen table via a
-    * broadcast hash set (scan, no shuffle); above it, sort-merge anti-join */
+  /** fetched-page batches at or below this size probe the digests store
+    * in [[Crawler.flagDuplicates]] via a broadcast of their digest set
+    * (scan, no shuffle); above it, sort-merge join. The URL sieve has no
+    * such constant: AQE picks its present-set join at run time */
   private val ProbeThreshold = 2L << 20
 
   private val gatesTrivial =
@@ -1045,9 +1027,12 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
   /** The overlapped round tail, DEPENDENCY-driven (no phase barrier): the
     * caller's `independent` sinks and state folds run alongside the SIEVE
     * (the gate), and the rank chain and seen append — which need ONLY the
-    * materialized sieve output — launch the moment it completes. A barrier
-    * here made every phase tail run its longest branch alone while the
-    * rest of the executor idled (occupancy 0.64 at 16t vs 0.84 at 4t). */
+    * materialized sieve output — are submitted from the gate's thread the
+    * moment it completes, without waiting for the independent branches. A
+    * barrier here made every phase tail run its longest branch alone while
+    * the rest of the executor idled (occupancy 0.64 at 16t vs 0.84 at 4t).
+    * Output data is unchanged: branches share only already-materialized
+    * caches. */
   private def sieve(st: LiveState, round: Int, links: DataFrame, f: Fetched,
       independent: Seq[() => Unit]): Sieved = {
     val order = Seq("parentSeq", "linkIdx")
@@ -1056,49 +1041,51 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
     var input: DataFrame = null
     var out = 0L
     var newDelta: DataFrame = null
-    inParallelStaged(independent,
-      // from bloomMinSeen on, the seen store is only ever SCANNED, never
-      // shuffled/sorted/broadcast (scan-probe; an SMJ re-shuffles all
-      // accumulated seen hashes every round). The candidate count and the
-      // batch bloom come out of ONE aggregation over the link cache
-      // (bloom_agg riding the count job) — separately they cost two full
-      // passes over the widest per-round stream.
-      gate = () => {
-        if (st.maxSeq >= cfg.bloomMinSeen) {
-          val (c, bb) = Sieve.bloomAggParallel(links, "urlHash",
-            math.max(f.linksUpper, 1024L), Sieve.BatchBloomFpp, bloomMergeGroups)
-          dedupIn = c
-          input = Sieve.newUrlsScanProbe(links, seen, order, lc,
-            broadcastLimit = ProbeThreshold,
-            candidateCount = dedupIn, seenCount = st.maxSeq,
-            prebuiltBatchBloom = bb)
-        } else {
-          dedupIn = links.count()
-          input = Sieve.newUrls(links, seen, order).transform(lc)
-        }
+    // from bloomMinSeen on, the seen store is only ever SCANNED, never
+    // shuffled/sorted/broadcast (scan-probe; an SMJ re-shuffles all
+    // accumulated seen hashes every round), and AQE picks the join against
+    // the bloom-filtered present set at run time. The candidate count and
+    // the batch bloom come out of ONE aggregation over the link cache
+    // (bloom_agg riding the count job) — separately they cost two full
+    // passes over the widest per-round stream.
+    val gate = () => {
+      if (st.maxSeq >= cfg.bloomMinSeen) {
+        val (c, bb) = Sieve.bloomAggParallel(links, "urlHash",
+          math.max(f.linksUpper, 1024L), Sieve.BatchBloomFpp, bloomMergeGroups)
+        dedupIn = c
+        input = Sieve.newUrlsScanProbe(links, seen, order, lc, bb)
+      } else {
+        dedupIn = links.count()
+        input = Sieve.newUrls(links, seen, order).transform(lc)
+      }
+    }
+    val dependents = Seq(
+      () => {
+        // 8x-oversplit buckets: parentSeq density is uneven (popular
+        // hosts sit at low seqs), so fine-grained monotone buckets keep
+        // the rank window's tasks balanced. First new seq is exactly
+        // maxSeq (dense continuation of enqueue order).
+        val (ranked, n) = Sieve.assignSeq(input, order, startSeq = st.maxSeq - 1L,
+          Sieve.linearBuckets(col("parentSeq"), f.loSeq, f.hiSeq,
+            math.max(8, cfg.statePartitions * 8)))
+        out = n
+        // (measured: repartitioning the delta by hostHash here costs more
+        // shuffle bytes than the heads aggregation's partial buffers save
+        // — the delta rows outnumber hosts; the frontier is re-clustered
+        // by hostHash only at compaction/snapshot)
+        newDelta = lc(budget(toFrontier(ranked.select("url", "urlHash", "seq")), st.hosts)
+          .select(st.frontier.columns.map(col): _*))
       },
-      dependents = Seq(
-        () => {
-          // 8x-oversplit buckets: parentSeq density is uneven (popular
-          // hosts sit at low seqs), so fine-grained monotone buckets keep
-          // the rank window's tasks balanced. First new seq is exactly
-          // maxSeq (dense continuation of enqueue order).
-          val (ranked, n) = Sieve.assignSeq(input, order, startSeq = st.maxSeq - 1L,
-            Sieve.linearBuckets(col("parentSeq"), f.loSeq, f.hiSeq,
-              math.max(8, cfg.statePartitions * 8)))
-          out = n
-          // (measured: repartitioning the delta by hostHash here costs more
-          // shuffle bytes than the heads aggregation's partial buffers save
-          // — the delta rows outnumber hosts; the frontier is re-clustered
-          // by hostHash only at compaction/snapshot)
-          newDelta = lc(budget(toFrontier(ranked.select("url", "urlHash", "seq")), st.hosts)
-            .select(st.frontier.columns.map(col): _*))
-        },
-        // seen append: ALL sieved urls (even budget-dropped ones are "seen"
-        // — the reference sieve recorded them before append()'s budget
-        // re-check)
-        () => input.select("urlHash")
-          .write.options(graft.util.FastLocalFs.writeOptions).mode(SaveMode.Overwrite).parquet(appendDir("seen", round))))
+      // seen append: ALL sieved urls (even budget-dropped ones are "seen"
+      // — the reference sieve recorded them before append()'s budget
+      // re-check)
+      () => input.select("urlHash")
+        .write.options(graft.util.FastLocalFs.writeOptions).mode(SaveMode.Overwrite).parquet(appendDir("seen", round)))
+    // the gate chain is submitted first: jobs are scheduled FIFO and the
+    // sieve is the round's critical path (submitted last, behind the
+    // tombstone fold, crawl_wide's op_wall_s rose ~9%: 0 of 5 seed pairs
+    // faster)
+    inParallel((() => { gate(); inParallel(dependents: _*) }) +: independent: _*)
     Sieved(input, dedupIn, out, newDelta)
   }
 

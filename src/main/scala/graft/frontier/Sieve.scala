@@ -1,6 +1,6 @@
 package graft.frontier
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
@@ -24,7 +24,10 @@ import org.apache.spark.util.sketch.BloomFilter
   *  - [[newUrlsScanProbe]] — the scale path: the seen store is only
   *    ever SCANNED, never shuffled/sorted/broadcast — a bloom built over
   *    the batch reverses the probe, and the (small) `present` set carries
-  *    the exact anti-join. Mercator's sequential store merge
+  *    the exact anti-join, one plan whose join (broadcast or shuffle of
+  *    `present`) adaptive query execution picks at run time from the
+  *    size it observes. The round path uses it from
+  *    `CrawlConfig.bloomMinSeen` on. Mercator's sequential store merge
   *    (`MercatorSieve.java:311-344`) reads its whole store once per
   *    flush; the scan-probe reproduces exactly that I/O pattern, where a
   *    plain SMJ anti-join would re-SHUFFLE the full accumulated store
@@ -35,10 +38,9 @@ import org.apache.spark.util.sketch.BloomFilter
   */
 object Sieve {
 
-  /** fpp of the batch bloom that reverses the seen probe. Shared constant:
-    * the presentUpper broadcast bound in [[newUrlsScanProbe]] is computed
-    * from this SAME value, so a caller pre-building the filter (bloom_agg
-    * fusion) must size it with [[BatchBloomFpp]] or the bound is invalid. */
+  /** fpp of the batch bloom that reverses the seen probe: the share of
+    * seen hashes outside the batch that still reach the exact anti-join of
+    * [[newUrlsScanProbe]]. */
   val BatchBloomFpp = 0.001
 
   /** Within-batch first-wins dedup + anti-join against `seen`, preserving
@@ -65,87 +67,37 @@ object Sieve {
     *     `present = seen WHERE batchBloom.mightContain(hash)` is a pure
     *     SCAN of the seen store — seen is never shuffled, sorted, or
     *     broadcast, at any batch size;
-    *  3. exact anti-join of the batch against the (small) present set —
-    *     broadcast when it fits, otherwise a shuffle join in which the
-    *     batch keeps the urlHash partitioning of its dedup and only
-    *     `present` moves.
+    *  3. exact anti-join of the batch against `present`, with no join hint:
+    *     adaptive query execution picks the join at run time. `present` is
+    *     a subset of `seen`, so while the static estimate of `seen` fits the
+    *     broadcast threshold the planner broadcasts `present` directly;
+    *     above it, only the filtered `present` rows are shuffled (the batch
+    *     keeps the urlHash partitioning of its dedup), and AQE re-plans to
+    *     a broadcast once it sees they are small.
     *
     * This is the Spark reading of Mercator's sequential store merge
     * (`MercatorSieve.java:311-344`): one sequential pass over the store per
     * flush, work ∝ batch. Returns the new-URL batch MATERIALIZED via `mat`
     * (callers pass localCheckpoint), so the output is safe for the
     * order-sensitive rank pass and is scanned — not recomputed — by its
-    * several consumers. The broadcast batch bloom and the materialized
-    * `present` set are released once `mat` has returned.
+    * several consumers. The broadcast batch bloom is released once `mat`
+    * has returned.
+    *
+    * @param batchBloom filter over every candidate urlHash (the Crawler
+    *                   builds it with [[bloomAggParallel]] at
+    *                   [[BatchBloomFpp]]); null means an empty batch
     */
-  def newUrlsScanProbe(
-      candidates: DataFrame,
-      seen: DataFrame,
-      orderCols: Seq[String],
-      mat: DataFrame => DataFrame,
-      broadcastLimit: Long,
-      candidateCount: Long,
-      seenCount: Long = -1L,
-      batchFpp: Double = BatchBloomFpp,
-      prebuiltBatchBloom: BloomFilter = null): DataFrame = {
-    val spark = candidates.sparkSession
-    // batch bloom over ALL candidate hashes: one column-pruned scan of the
-    // (columnar-cached) candidate batch — the batch itself is NOT
-    // materialized for this. `present` computed from the all-candidates
-    // bloom equals seen ∩ batch exactly (plus ~seen*fpp false positives).
-    // Callers that already aggregated the batch (e.g. fusing the filter
-    // build with the candidate count via bloom_agg) pass the filter in and
-    // skip the pass.
-    // empty batch: nothing can be present in seen, and building a bloom
-    // over zero rows is ill-defined (Spark's stat.bloomFilter NPEs on it)
-    if (candidateCount == 0 && prebuiltBatchBloom == null)
-      return mat(Ranking.firstPerKey(candidates, "urlHash", orderCols))
-    val batchBloom =
-      if (prebuiltBatchBloom != null) prebuiltBatchBloom
-      else candidates.stat.bloomFilter("urlHash",
-        math.max(candidateCount, 1024L), batchFpp)
-    val bb = spark.sparkContext.broadcast(batchBloom)
-    try {
-      val presentPlan = seen.where(graft.functions.might_contain_bank(col("urlHash"), Seq(bb)))
-      val deduped = Ranking.firstPerKey(candidates, "urlHash", orderCols)
-      // |present| <= |batch| + |seen|*fpp: when that bound already fits the
-      // broadcast limit, skip the materialize-and-count barriers entirely —
-      // the broadcast exchange inside the anti-join evaluates the seen scan
-      // exactly once, and the whole sieve tail is ONE job instead of three
-      // (materialize present, count present, anti-join).
-      // the |present| bound below assumes the batch bloom was sized for (at
-      // least) this batch at `batchFpp`. An undersized caller-prebuilt
-      // filter (e.g. one whose bloom_agg build was clamped by the session's
-      // runtime-filter numBits cap) has a HIGHER real fpp, so the bound is
-      // invalid — but the sieve itself stays correct (the bloom is only a
-      // prefilter; the anti-join below is exact), so the right response is
-      // to SKIP the bound-based shortcut and fall through to the
-      // materialize-and-count path that measures |present| exactly, not to
-      // abort a crawl hours in over a degraded prefilter.
-      val boundValid = prebuiltBatchBloom == null ||
-        prebuiltBatchBloom.bitSize() >=
-          BloomFilter.optimalNumOfBits(math.max(candidateCount, 1024L), batchFpp)
-      val presentUpper =
-        if (seenCount < 0 || !boundValid) Long.MaxValue
-        else candidateCount + math.ceil(seenCount * batchFpp).toLong
-      if (presentUpper <= broadcastLimit)
-        return mat(deduped.join(broadcast(presentPlan), Seq("urlHash"), "left_anti"))
-      val present = mat(presentPlan)
-      try {
-        val presentCount = present.count()
-        if (presentCount == 0) mat(deduped)
-        else if (presentCount <= broadcastLimit)
-          // ONE materialization of the batch: dedup feeds the broadcast
-          // anti-join directly (a hash-set probe per row costs what the
-          // bloom probe did, and replaces it)
-          mat(deduped.join(broadcast(present), Seq("urlHash"), "left_anti"))
-        else
-          // oversized present set (a mostly-already-seen batch): a shuffle
-          // join against `present`, never against the full seen store
-          mat(deduped.join(present, Seq("urlHash"), "left_anti"))
-      } finally // the materialized output no longer reads what `mat` made
-        Checkpoints.release(Seq(present), kept = Seq(presentPlan))
-    } finally bb.unpersist(blocking = false)
+  def newUrlsScanProbe(candidates: DataFrame, seen: DataFrame,
+      orderCols: Seq[String], mat: DataFrame => DataFrame,
+      batchBloom: BloomFilter): DataFrame = {
+    val deduped = Ranking.firstPerKey(candidates, "urlHash", orderCols)
+    // empty batch: nothing can be present in seen
+    if (batchBloom == null) return mat(deduped)
+    val bb = candidates.sparkSession.sparkContext.broadcast(batchBloom)
+    try mat(deduped.join(
+      seen.where(graft.functions.might_contain_bank(col("urlHash"), Seq(bb))),
+      Seq("urlHash"), "left_anti"))
+    finally bb.unpersist(blocking = false)
   }
 
   /** Row count + bloom filter over `hashCol` in ONE pass, with a PARALLEL

@@ -21,6 +21,11 @@ class PlanQualitySpec extends AnyFunSuite {
   private def physicalPlan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  /** The scan-probe sieve's batch bloom, built as the crawl builds it. */
+  private def batchBloom(batch: org.apache.spark.sql.DataFrame) =
+    graft.frontier.Sieve.bloomAggParallel(batch, "urlHash", batch.count(),
+      graft.frontier.Sieve.BatchBloomFpp, groups = 4)._2
+
   /** AQE finalizes the plan only on execution; materialize then inspect. */
   private def finalPlan(df: org.apache.spark.sql.DataFrame): String = {
     df.collect()
@@ -125,11 +130,10 @@ class PlanQualitySpec extends AnyFunSuite {
     val batch = (1L to 2000L).map(i => (s"u$i", i, 0L, i))
       .toDF("url", "urlHash", "parentSeq", "linkIdx").localCheckpoint(true)
     val seen = (1L to 900L).toDF("urlHash").localCheckpoint(true)
-    // the scan-probe's oversized-present fallback (present set over the
-    // broadcast limit); identity `mat` keeps the batch-bloom prefilter of
-    // the present set in the final plan
+    // identity `mat` keeps the batch-bloom prefilter of the present set in
+    // the final plan
     val out = graft.frontier.Sieve.newUrlsScanProbe(batch, seen, Seq("parentSeq", "linkIdx"),
-      mat = identity, broadcastLimit = 10L, candidateCount = 2000L)
+      mat = identity, batchBloom = batchBloom(batch))
     val plan = finalPlan(out)
     assert(!plan.contains("UDF"), s"sieve prefilter fell back to a Scala UDF:\n$plan")
     assert(plan.contains("might_contain_bank"), s"expected the bank expression:\n$plan")
@@ -156,27 +160,23 @@ class PlanQualitySpec extends AnyFunSuite {
     val batch = (99001L to 102000L).map(i => (s"u$i", i, 0L, i))
       .toDF("url", "urlHash", "parentSeq", "linkIdx").localCheckpoint(true)
     val seen = (1L to 100000L).toDF("urlHash").localCheckpoint(true)
+    val bloom = batchBloom(batch)
     spark.sparkContext.addSparkListener(listener)
     try {
       val out = graft.frontier.Sieve.newUrlsScanProbe(batch, seen,
         Seq("parentSeq", "linkIdx"), mat = df => df.localCheckpoint(true),
-        broadcastLimit = 1L << 20, candidateCount = 3000L)
+        batchBloom = bloom)
       assert(out.select("urlHash").as[Long].collect().toSet == (100001L to 102000L).toSet)
       assert(!finalPlan(out).contains("SortMergeJoin"))
-      // barrier-free shortcut: with a seen count, the present-set bound
-      // fits the broadcast limit and the materialize+count barriers are
-      // skipped — same exact result, still no SMJ
+      // repeated runs of the one plan: same exact result, still no SMJ
       val outFast = graft.frontier.Sieve.newUrlsScanProbe(batch, seen,
         Seq("parentSeq", "linkIdx"), mat = df => df.localCheckpoint(true),
-        broadcastLimit = 1L << 20,
-        candidateCount = 3000L, seenCount = 100000L)
+        batchBloom = bloom)
       assert(outFast.select("urlHash").as[Long].collect().toSet == (100001L to 102000L).toSet)
       assert(!finalPlan(outFast).contains("SortMergeJoin"))
-      // the oversized-present fallback path is exact too (shuffle join
-      // against present, still never against the full seen store)
       val outFb = graft.frontier.Sieve.newUrlsScanProbe(batch, seen,
         Seq("parentSeq", "linkIdx"), mat = df => df.localCheckpoint(true),
-        broadcastLimit = 10L, candidateCount = 3000L)
+        batchBloom = bloom)
       assert(outFb.select("urlHash").as[Long].collect().toSet == (100001L to 102000L).toSet)
       // let straggler stage-completed events drain
       var last = -1L
@@ -191,6 +191,76 @@ class PlanQualitySpec extends AnyFunSuite {
       assert(shuffled.get < 30000L,
         s"scan-probe shuffled ${shuffled.get} records — the seen store leaked into a shuffle")
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("scan-probe sieve: AQE picks the present-set join at run time") {
+    import spark.implicits._
+    // the never-shuffles shape (100k seen, 3000-row batch); identity `mat`
+    // keeps the anti-join in the final adaptive plan
+    val shuffled = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(
+          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        shuffled.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
+    }
+    val batch = (99001L to 102000L).map(i => (s"u$i", i, 0L, i))
+      .toDF("url", "urlHash", "parentSeq", "linkIdx").localCheckpoint(true)
+    val seen = (1L to 100000L).toDF("urlHash").localCheckpoint(true)
+    val order = Seq("parentSeq", "linkIdx")
+    val bloom = batchBloom(batch)
+    val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    def run(): (Set[Long], String) = {
+      val out = graft.frontier.Sieve.newUrlsScanProbe(batch, seen, order,
+        mat = identity, batchBloom = bloom)
+      (out.select("urlHash").as[Long].collect().toSet, finalPlan(out))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (broadcastRun, shuffleRun) = try {
+      // run 1: the static planner may not broadcast; AQE may, up to 10 MB
+      // (the static threshold's default; left unset, the adaptive
+      // threshold falls back to the static -1), and it sees that the
+      // present set is small
+      spark.conf.set(keys(0), "-1")
+      spark.conf.set(keys(1), "10MB")
+      val r1 = run()
+      // run 2: no broadcast at all -> a shuffle join against present
+      spark.conf.set(keys(1), "-1")
+      val r2 = run()
+      var last = -1L
+      var stable = 0
+      while (stable < 3 && last < 1000000L) {
+        Thread.sleep(200)
+        val v = shuffled.get
+        if (v == last) stable += 1 else { stable = 0; last = v }
+      }
+      (r1, r2)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    assert(broadcastRun._2.contains("BroadcastHashJoin") && broadcastRun._2.contains("LeftAnti"),
+      s"expected AQE to broadcast the present set:\n${broadcastRun._2}")
+    assert(!shuffleRun._2.contains("BroadcastHashJoin") && shuffleRun._2.contains("LeftAnti"),
+      s"expected a shuffle anti-join:\n${shuffleRun._2}")
+    val exact = graft.frontier.Sieve.newUrls(batch, seen, order)
+      .select("urlHash").as[Long].collect().toSet
+    assert(exact == (100001L to 102000L).toSet)
+    assert(broadcastRun._1 == exact && shuffleRun._1 == exact)
+    // both runs shuffle batch-sized data only; the 100k-row seen store
+    // never reaches an exchange
+    assert(shuffled.get < 30000L,
+      s"scan-probe shuffled ${shuffled.get} records — the seen store leaked into a shuffle")
+  }
+
+  test("q_sieve_first_seen ranks without a single-partition window") {
+    val plan = finalPlan(SparkEntry.queries("q_sieve_first_seen")(spark, sf))
+    assert(plan.contains("Window") && !plan.contains("SinglePartition"),
+      s"the enqueue rank must not move every URL to one partition:\n$plan")
   }
 
   test("pending frontier (select, compaction, snapshot) is a broadcast left-anti join") {

@@ -179,6 +179,49 @@ class AnalyticsSpec extends AnyFunSuite {
     assert(got == expect)
   }
 
+  test("near-dup candidate builders launch no Spark job until an action") {
+    import spark.implicits._
+    // job starts arrive in posting order, so the ones between two marked
+    // jobs are exactly the jobs launched in between
+    val marker = "graft.test.marker"
+    val seen = new java.util.concurrent.LinkedBlockingQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.put(Option(e.properties).flatMap(p => Option(p.getProperty(marker)))
+          .getOrElse("job"))
+    }
+    def mark(name: String): Unit = {
+      spark.sparkContext.setLocalProperty(marker, name)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setLocalProperty(marker, null)
+    }
+    def jobsUntil(name: String): Int = {
+      var n = 0
+      var e = ""
+      while (e != name) {
+        e = seen.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+        assert(e != null, s"marker $name never arrived")
+        if (e == "job") n += 1
+      }
+      n
+    }
+    val emb = (1L to 40L).map(i => (i, Array.fill(8)((i % 7).toFloat - 3f)))
+      .toDF("vec_id", "embedding")
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      mark("start")
+      jobsUntil("start")
+      val built = Seq(
+        Dedup.minhashCandidatePairs(docs, "doc_id", "text", shingleK = 4),
+        Dedup.simhashCandidatePairs(docs, "doc_id", "text"),
+        Dedup.embeddingNearDupPairsCoordSign(emb, "vec_id", "embedding", planes = 4))
+      mark("built")
+      assert(jobsUntil("built") == 0, "building the near-dup DataFrames ran Spark jobs")
+      // each still runs (and materializes its signatures) at its first action
+      built.foreach(_.collect())
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("LSH skew guard: a degenerate corpus (identical docs) stays bounded") {
     import spark.implicits._
     // 3000 identical docs + 4 distinct: without the bucket cap every band

@@ -70,16 +70,12 @@ class SieveSpec extends AnyFunSuite {
       df.orderBy("linkIdx").select("url").as[String].collect().toSeq
     val exact = urls(Sieve.newUrls(b, seen, order))
     assert(exact.nonEmpty && exact.forall(u => !seenUrls.contains(u)))
-    // the scan-probe round path, through each of its three shapes: the
-    // |present| bound shortcut (seen count known), the broadcast-present
-    // path (count unknown), and the oversized-present fallback (present
-    // set over the broadcast limit)
-    def probe(limit: Long, seenCount: Long) = urls(Sieve.newUrlsScanProbe(b, seen, order,
-      mat = _.localCheckpoint(true), broadcastLimit = limit,
-      candidateCount = mixed.size.toLong, seenCount = seenCount))
-    assert(probe(1L << 20, seenUrls.size.toLong) == exact, "bound shortcut")
-    assert(probe(1L << 20, -1L) == exact, "broadcast-present path")
-    assert(probe(10L, -1L) == exact, "oversized-present fallback")
+    // the scan-probe round path, with the batch bloom built as the crawl
+    // builds it
+    val (_, bloom) = Sieve.bloomAggParallel(b, "urlHash", mixed.size.toLong,
+      Sieve.BatchBloomFpp, groups = 4)
+    assert(urls(Sieve.newUrlsScanProbe(b, seen, order,
+      mat = _.localCheckpoint(true), batchBloom = bloom)) == exact)
   }
 
   test("the scan-probe sieve keeps no cached block but its output's") {
@@ -89,19 +85,16 @@ class SieveSpec extends AnyFunSuite {
     val mixed = Vector.fill(400)(if (rnd.nextBoolean()) "s" + rnd.nextInt(300) else "n" + rnd.nextInt(150))
     val b = batch(mixed, 0)
     def cached = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
-    // an unknown seen count materializes `present`: the broadcast-present
-    // path, then the oversized-present fallback
-    Seq(1L << 20, 10L).foreach { limit =>
-      val before = cached
-      val out = Sieve.newUrlsScanProbe(b, seen, Seq("parentSeq", "linkIdx"),
-        mat = _.localCheckpoint(true), broadcastLimit = limit,
-        candidateCount = mixed.size.toLong, seenCount = -1L)
-      val outRdds = Checkpoints.rdds(Seq(out)).map(_.id).toSet
-      // (an earlier test's blocks may be cleaned meanwhile, so compare
-      // what the call added)
-      assert(outRdds.size == 1 && cached -- before == outRdds, s"broadcast limit $limit")
-      Checkpoints.release(Seq(out))
-    }
+    val (_, bloom) = Sieve.bloomAggParallel(b, "urlHash", mixed.size.toLong,
+      Sieve.BatchBloomFpp, groups = 4)
+    val before = cached
+    val out = Sieve.newUrlsScanProbe(b, seen, Seq("parentSeq", "linkIdx"),
+      mat = _.localCheckpoint(true), batchBloom = bloom)
+    val outRdds = Checkpoints.rdds(Seq(out)).map(_.id).toSet
+    // (an earlier test's blocks may be cleaned meanwhile, so compare
+    // what the call added)
+    assert(outRdds.size == 1 && cached -- before == outRdds)
+    Checkpoints.release(Seq(out))
   }
 
   test("bloom_agg builds a filter with stat.bloomFilter membership semantics") {
@@ -148,7 +141,7 @@ class SieveSpec extends AnyFunSuite {
     val probes = (1L to 30000L).map(i => i * 37L + 11L).filterNot(hashes.contains)
     assert(probes.count(merged.mightContainLong) <= probes.size / 50)
     // sized like the single-aggregate filter (mergeInPlace compatibility
-    // and the scan-probe presentUpper contract both lean on this)
+    // leans on this)
     val ref = df.stat.bloomFilter("urlHash", 8000, 0.01)
     assert(merged.bitSize() == ref.bitSize())
     // empty input -> (0, null)
